@@ -1047,26 +1047,31 @@ def png_pixels(payload: bytes):
         data = zlib.decompress(bytes(idat))
     except zlib.error as e:  # truncated/corrupt IDAT must quarantine (A12)
         raise ValueError(f"PNG IDAT stream corrupt: {e}") from e
+    if not w or not h:
+        raise ValueError(f"PNG IHDR declares an empty {w}x{h} image")
     bits_px = depth * channels
     bpp = max(1, bits_px // 8)
+    passes = []
+    for x0, dx, y0, dy in _ADAM7 if interlace == 1 else ((0, 1, 0, 1),):
+        wp = (w - x0 + dx - 1) // dx
+        hp = (h - y0 + dy - 1) // dy
+        if wp > 0 and hp > 0:  # an empty pass has no bytes (RFC 2083 §2.6)
+            passes.append((x0, dx, y0, dy, wp, hp, (wp * bits_px + 7) // 8))
+    # the IHDR geometry fixes the inflated length (a filter byte plus
+    # the stride per row): check it BEFORE allocating from w and h, which
+    # a corrupt header can make arbitrarily large
+    if len(data) != sum(hp * (1 + stride) for *_, hp, stride in passes):
+        raise ValueError("PNG pixel data length mismatch")
     out = np.zeros(
         (h, w, channels), dtype=np.uint16 if depth == 16 else np.uint8
     )
-    passes = _ADAM7 if interlace == 1 else ((0, 1, 0, 1),)
     pos = 0
-    for x0, dx, y0, dy in passes:
-        wp = (w - x0 + dx - 1) // dx
-        hp = (h - y0 + dy - 1) // dy
-        if wp <= 0 or hp <= 0:
-            continue  # empty pass contributes no bytes (RFC 2083 §2.6)
-        stride = (wp * bits_px + 7) // 8
+    for x0, dx, y0, dy, wp, hp, stride in passes:
         rows, pos = _png_defilter(data, pos, hp, stride, bpp)
         for r in range(hp):
             out[y0 + r * dy, x0::dx] = _png_unpack_row(
                 rows[r], wp, depth, channels
             )
-    if pos != len(data):
-        raise ValueError("PNG pixel data length mismatch")
     if color == 3:
         idx = out[:, :, 0]
         if int(idx.max(initial=0)) >= len(plte):

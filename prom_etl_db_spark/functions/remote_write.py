@@ -262,15 +262,16 @@ _ENC_FIELD_CACHE = {
     for n in range(1, 16) for w in (0, 1, 2, 5)
 }
 
-# wire-2 (LEN) headers indexed by field number — _enc_len's header is
-# always one of these (r13; skips the tuple build + dict probe of
-# _enc_field on the hottest encoder helper). 32 covers every field in
-# prompb/v2 (max used: custom_values = 16).
+# wire-2 (LEN) headers indexed by field number (r13; skips the tuple
+# build + dict probe of _enc_field on the hottest encoder helper). 32
+# covers every field in prompb/v2 (max used: custom_values = 16); higher
+# field numbers take _enc_field.
 _LEN_HDR = tuple(_enc_uvarint((n << 3) | 2) for n in range(32))
 
 
 def _enc_len(num: int, payload: bytes) -> bytes:
-    return _LEN_HDR[num] + _enc_uvarint(len(payload)) + payload
+    hdr = _LEN_HDR[num] if num < 32 else _enc_field(num, 2)
+    return hdr + _enc_uvarint(len(payload)) + payload
 
 
 # constant headers on the per-sample/per-exemplar encode path (r13)
@@ -824,6 +825,10 @@ def _dense_buckets(spans: list[tuple[int, int]], deltas: list,
                 f"remote-write: {side} span range {ln0} exceeds "
                 f"{_MAX_DENSE_BUCKETS} buckets")
         return lo, counts
+    if not indices:
+        # zero-length spans only (an empty span submessage is legal on
+        # the wire): an empty side, the decoders' (0, []) shape
+        return 0, []
     lo, hi = indices[0], indices[-1]
     if hi - lo + 1 > _MAX_DENSE_BUCKETS:
         raise ValueError(

@@ -38,6 +38,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from prom_etl_db_spark.operators.native_hist import (
+    _nh_align_add,
+    _nh_at,
+    _nh_downscale,
+)
 from prom_etl_db_spark.schema import epoch_seconds
 
 def _series(labels: Column) -> Column:
@@ -2839,332 +2844,6 @@ def time_component_columns(v_seconds: Column) -> dict[str, Column]:
     }
 
 
-def _nh_downscale(
-    offset: Column, counts: Column, d: Column, *, elem: str = "bigint"
-):
-    """Downscale dense native-histogram buckets by ``d`` scale steps
-    (Prometheus's merge before subtracting mismatched-schema samples):
-    fine bucket index i folds into coarse index ⌈i / 2^d⌉ — fine bucket
-    i covers (base^(i-1), base^i] and coarse j covers the union of fine
-    (2^d·(j-1), 2^d·j]. Pure Column; O(n_fine · n_coarse) elementwise,
-    bounded by the decoder's 4096-bucket guard. Returns (coarse_offset,
-    coarse_counts); d == 0 passes through. ``elem`` is the count
-    element type — "bigint" for integer histograms, "double" for the
-    FLOAT flavor (rate()'s per-second output, the wire float flavor) —
-    r10: the fold's zero value must match or the aggregate fails to
-    resolve."""
-    # F.shiftleft needs a literal shift; 2^d is exact in double for the
-    # schema range (d <= 12)
-    m = F.pow(F.lit(2.0), d.cast("double")).cast("bigint")
-
-    def ceil_div(a):  # floor-safe ceiling division for negative indices
-        am = a + m - F.lit(1)
-        r = ((am % m) + m) % m
-        return ((am - r) / m).cast("int")
-
-    n = F.size(counts)
-    j_lo = ceil_div(offset.cast("bigint"))
-    j_hi = ceil_div((offset + n - F.lit(1)).cast("bigint"))
-    zero = F.lit(0).cast(elem)
-    coarse = F.transform(
-        F.sequence(j_lo, j_hi),
-        lambda j: F.aggregate(
-            F.sequence(F.lit(0), n - F.lit(1)),
-            zero,
-            lambda acc, k: acc
-            + F.when(
-                ceil_div((offset + k).cast("bigint")) == j,
-                F.coalesce(F.try_element_at(counts, k + F.lit(1)), zero),
-            ).otherwise(zero),
-        ),
-    )
-    out_off = F.when(n > 0, j_lo).otherwise(offset)
-    out_counts = F.when(n > 0, coarse).otherwise(counts)
-    return (
-        F.when(d > 0, out_off).otherwise(offset),
-        F.when(d > 0, out_counts).otherwise(counts),
-    )
-
-
-def native_hist_increase(
-    hist: DataFrame, *, extra_keys: Sequence[str] = (),
-    counter: bool = True,
-) -> DataFrame:
-    """PromQL ``increase()`` over NATIVE-histogram series (r8): per
-    series, the bucket-wise count increase between the earliest and
-    latest sample — Prometheus's counter semantics lifted to whole
-    histograms (promql native-histogram rate/increase).
-    ``counter=False`` is ``delta()`` over GAUGE histograms (r10): the
-    same aligned endpoint difference with NO reset rule — a negative
-    component is legal gauge data, not a restart (Prometheus's delta
-    applies only to gauges for exactly this reason); the ``reset``
-    column is emitted as a constant False so the output shape is
-    shared.
-    ``extra_keys`` (r10) appends partition columns to the series key —
-    the range-query grid form groups on (series, grid instant) and
-    reuses this exact aggregation; the columns pass through to the
-    output. Semantics:
-
-    - bucket arrays are ALIGNED on absolute bucket indices first (a
-      growing histogram adds buckets on either side, shifting
-      pos_offset — absent buckets count 0);
-    - a COUNTER RESET (any aligned bucket, or the zero bucket,
-      decreasing) makes the increase the LAST sample's histogram
-      verbatim, Prometheus's reset rule;
-    - mixed schemas within one series DOWNSCALE the finer sample to
-      the coarser schema before subtracting — Prometheus's own rule
-      (fine bucket i folds into coarse ⌈i/2^d⌉; `_nh_downscale`), so a
-      mid-series scrape-config change degrades resolution instead of
-      erroring or silently mis-pairing buckets;
-    - CUSTOM-BUCKET series (NHCB, schema −53; later r8): increase is
-      the same aligned subtraction — bucket index i means
-      custom_values[i] on both endpoints — but ONLY when the
-      boundaries match; a custom_values CHANGE between endpoints
-      refuses loudly (F.raise_error), because index-wise subtraction
-      across different boundaries silently attributes counts to the
-      wrong le, and unlike exponential schemas there is no
-      formula-defined merge. Mixing −53 with an exponential schema in
-      one series refuses for the same reason. The checks only exist
-      when the input CARRIES a custom_values column; exponential-only
-      callers are unaffected.
-
-    NEGATIVE buckets (r10, closing the r9 verdict's weak finding): when
-    the input carries ``neg_offset``/``neg_counts`` — the wire decoders
-    ALWAYS emit them (`functions/remote_write.py` NATIVE_HIST_SCHEMA;
-    OTLP likewise) — the negative side gets the SAME treatment as the
-    positive side: downscale to the common schema, align on absolute
-    indices, subtract, and a decrease in ANY aligned negative bucket is
-    a counter reset too (Prometheus's detectReset walks both spans).
-    Before r10 the snapshot silently dropped the negative side, so the
-    increase of a negative-mass histogram under-counted and a reset
-    visible only in the negative buckets went undetected.
-
-    Input shape = the wire decoders' output: (labels map, ts timestamp,
-    schema int, zero_count long, pos_offset int, pos_counts
-    array<long>[, neg_offset int, neg_counts array<long>]
-    [, custom_values array<double>]). Output: one row per
-    series with the increase in the same shape plus ``reset`` and
-    ``dt_seconds`` (``neg_*``/``custom_values`` only when the input
-    carried them — pos-only callers keep their schema).
-
-    Plan: ONE hash aggregation keyed on the series (min_by/max_by keep
-    the endpoint structs — no sort, no window), then pure-Column array
-    algebra; a single shuffle regardless of samples per series.
-    """
-    has_cv = "custom_values" in hist.columns
-    has_neg = (
-        "neg_offset" in hist.columns and "neg_counts" in hist.columns)
-    # r10 (parser reachability): the scalar histogram components ride
-    # along when the frame carries them — count/sum difference with the
-    # same reset rule (Prometheus's DetectReset also fires on a count
-    # or sum decrease), zero_threshold carried from the LATER endpoint
-    # verbatim (a mid-series threshold change is a scrape-config event;
-    # the increase keeps the newer configuration)
-    has_cnt = "count" in hist.columns
-    has_sum = "sum" in hist.columns
-    has_zt = "zero_threshold" in hist.columns
-    # r11 (ADVICE): the count element type follows the FRAME — bigint
-    # for integer histograms, double for the wire FLOAT flavor
-    # (NATIVE_HIST_FLOAT_SCHEMA) and rate()'s per-second output. Every
-    # typed zero below (downscale folds, empty-array coalesces, the
-    # diff otherwise-branches) must use it, or float frames fail plan
-    # resolution — the native_hist_sum_by pattern.
-    elem = hist.schema["pos_counts"].dataType.elementType.simpleString()
-    keyed = _ensure_series(hist)
-    snap_cols = ["ts", "schema", "zero_count", "pos_offset", "pos_counts"]
-    if has_neg:
-        snap_cols += ["neg_offset", "neg_counts"]
-    for c, flag in (("count", has_cnt), ("sum", has_sum),
-                    ("zero_threshold", has_zt)):
-        if flag:
-            snap_cols.append(c)
-    if has_cv:
-        snap_cols.append("custom_values")
-    snap = F.struct(*snap_cols)
-    g = keyed.groupBy("__series", *extra_keys).agg(
-        F.min_by(snap, F.col("ts")).alias("a"),
-        F.max_by(snap, F.col("ts")).alias("b"),
-    )
-    a, b = F.col("a"), F.col("b")
-    # schema mismatch: downscale the FINER endpoint to the coarser
-    # schema (d scale steps), then subtract as usual
-    target = F.least(a["schema"], b["schema"])
-    if has_cv:
-        nhcb_a = a["schema"] == F.lit(-53)
-        nhcb_b = b["schema"] == F.lit(-53)
-        target = (
-            F.when(
-                nhcb_a != nhcb_b,
-                F.raise_error(F.lit(
-                    "native_hist_increase: series mixes custom-bucket "
-                    "(schema -53) and exponential samples — no merge "
-                    "exists across bucket families")),
-            )
-            .when(
-                nhcb_a & nhcb_b
-                & (a["custom_values"] != b["custom_values"]),
-                F.raise_error(F.lit(
-                    "native_hist_increase: custom_values changed "
-                    "mid-series — index-wise subtraction across "
-                    "different boundaries would mis-attribute counts")),
-            )
-            .otherwise(target)
-        )
-    ao, ac = _nh_downscale(
-        a["pos_offset"], a["pos_counts"],
-        (a["schema"] - target).cast("int"), elem=elem)
-    bo, bc = _nh_downscale(
-        b["pos_offset"], b["pos_counts"],
-        (b["schema"] - target).cast("int"), elem=elem)
-    g = (
-        g.withColumn("schema", target.cast("int"))
-        .withColumn("__ao", ao).withColumn("__ac", ac)
-        .withColumn("__bo", bo).withColumn("__bc", bc)
-    )
-    if has_neg:
-        # NULL-tolerant: a frame may carry NULL neg arrays for rows
-        # decoded from sources without a negative side. An absent
-        # side's offset coalesces to the OTHER endpoint's offset (r11
-        # ADVICE) — coalescing to 0 would widen the aligned span to
-        # [min(0, off), hi) and materialize a dense zero-filled diff
-        # for series whose negative mass sits at a far offset.
-        empty = F.expr(f"CAST(array() AS array<{elem}>)")
-        ano, anc = _nh_downscale(
-            F.coalesce(a["neg_offset"], b["neg_offset"], F.lit(0)),
-            F.coalesce(a["neg_counts"], empty),
-            (a["schema"] - target).cast("int"), elem=elem)
-        bno, bnc = _nh_downscale(
-            F.coalesce(b["neg_offset"], a["neg_offset"], F.lit(0)),
-            F.coalesce(b["neg_counts"], empty),
-            (b["schema"] - target).cast("int"), elem=elem)
-        g = (
-            g.withColumn("__ano", ano).withColumn("__anc", anc)
-            .withColumn("__bno", bno).withColumn("__bnc", bnc)
-        )
-        # an EMPTY side (decoders emit offset 0 + [] for no negative
-        # spans) adopts the other endpoint's offset for alignment —
-        # an empty array contributes zeros anywhere, and keeping its
-        # own offset 0 against a far-offset other side would span
-        # [min(0, off), hi) with dense materialized zeros (r11 ADVICE)
-        g = (
-            g.withColumn(
-                "__ano",
-                F.when(
-                    (F.size("__anc") == 0) & (F.size("__bnc") > 0),
-                    F.col("__bno"),
-                ).otherwise(F.col("__ano")))
-            .withColumn(
-                "__bno",
-                F.when(
-                    (F.size("__bnc") == 0) & (F.size("__anc") > 0),
-                    F.col("__ano"),
-                ).otherwise(F.col("__bno")))
-        )
-    lo = F.least(F.col("__ao"), F.col("__bo"))
-    hi = F.greatest(
-        F.col("__ao") + F.size(F.col("__ac")),
-        F.col("__bo") + F.size(F.col("__bc")),
-    )
-
-    def at(off, arr, i):
-        idx = i - off + F.lit(1)
-        return F.when(
-            idx >= 1, F.coalesce(F.try_element_at(arr, idx), F.lit(0))
-        ).otherwise(F.lit(0))
-
-    # empty-to-empty series: sequence(lo, hi-1) with lo > hi-1 is
-    # invalid — guard with an empty array. A union span beyond 4096
-    # indices refuses (r11 — `native_hist_sum_by`'s dense-expansion
-    # bomb guard applied to the endpoint diff: two far-apart offsets
-    # from a buggy producer would otherwise materialize a dense array
-    # spanning the gap; real distributions' endpoint ranges overlap)
-    aligned_diff = F.when(
-        hi - lo > F.lit(4096),
-        F.raise_error(F.lit(
-            "native_hist_increase: aligned bucket index span exceeds "
-            "4096 — dense-expansion bomb guard")),
-    ).when(
-        hi > lo,
-        F.transform(
-            F.sequence(lo, hi - 1),
-            lambda i: at(F.col("__bo"), F.col("__bc"), i)
-            - at(F.col("__ao"), F.col("__ac"), i),
-        ),
-    ).otherwise(F.array().cast(f"array<{elem}>"))
-    g = g.withColumn("__diff", aligned_diff)
-    reset = F.exists(F.col("__diff"), lambda d: d < 0) | (
-        b["zero_count"] < a["zero_count"]
-    )
-    if has_cnt:
-        reset = reset | (b["count"] < a["count"])
-    if has_sum:
-        # NULL-safe: an unknown sum can't signal a reset
-        reset = reset | F.coalesce(b["sum"] < a["sum"], F.lit(False))
-    if not counter:
-        # gauge delta: a decrease is DATA — no reset rule anywhere
-        reset = F.lit(False)
-    neg_out: list[Column] = []
-    if has_neg:
-        n_lo = F.least(F.col("__ano"), F.col("__bno"))
-        n_hi = F.greatest(
-            F.col("__ano") + F.size(F.col("__anc")),
-            F.col("__bno") + F.size(F.col("__bnc")),
-        )
-        neg_diff = F.when(
-            n_hi - n_lo > F.lit(4096),
-            F.raise_error(F.lit(
-                "native_hist_increase: aligned NEGATIVE bucket index "
-                "span exceeds 4096 — dense-expansion bomb guard")),
-        ).when(
-            n_hi > n_lo,
-            F.transform(
-                F.sequence(n_lo, n_hi - 1),
-                lambda i: at(F.col("__bno"), F.col("__bnc"), i)
-                - at(F.col("__ano"), F.col("__anc"), i),
-            ),
-        ).otherwise(F.array().cast(f"array<{elem}>"))
-        g = g.withColumn("__ndiff", neg_diff)
-        # a decrease visible ONLY in the negative buckets is a reset
-        # too (r10 — before, it went undetected); gauge delta keeps
-        # the constant-False reset
-        if counter:
-            reset = reset | F.exists(F.col("__ndiff"), lambda d: d < 0)
-        neg_out = [
-            F.when(reset, F.col("__bno")).otherwise(n_lo)
-            .alias("neg_offset"),
-            F.when(reset, F.col("__bnc")).otherwise(F.col("__ndiff"))
-            .alias("neg_counts"),
-        ]
-    return g.select(
-        F.map_from_entries("__series").alias("labels"),
-        *extra_keys,
-        "schema",
-        reset.alias("reset"),
-        F.when(reset, b["zero_count"])
-        .otherwise(b["zero_count"] - a["zero_count"])
-        .alias("zero_count"),
-        # on reset the increase is the LAST sample verbatim — at the
-        # TARGET schema (its own downscaled form)
-        F.when(reset, F.col("__bo")).otherwise(lo).alias("pos_offset"),
-        F.when(reset, F.col("__bc")).otherwise(F.col("__diff"))
-        .alias("pos_counts"),
-        *neg_out,
-        *([
-            F.when(reset, b["count"]).otherwise(b["count"] - a["count"])
-            .alias("count"),
-        ] if has_cnt else []),
-        *([
-            F.when(reset, b["sum"]).otherwise(b["sum"] - a["sum"])
-            .alias("sum"),
-        ] if has_sum else []),
-        *([b["zero_threshold"].alias("zero_threshold")] if has_zt else []),
-        (F.unix_timestamp(b["ts"]) - F.unix_timestamp(a["ts"]))
-        .cast("long")
-        .alias("dt_seconds"),
-        *([b["custom_values"].alias("custom_values")] if has_cv else []),
-    )
-
-
 def _null_safe_join_back(
     base: DataFrame, asm: DataFrame, keys: list[str]
 ) -> DataFrame:
@@ -3529,35 +3208,6 @@ def otlp_delta_hist_to_cumulative(
     )
 
 
-def _nh_at(off: Column, arr: Column, i: Column) -> Column:
-    """Dense-bucket lookup by ABSOLUTE index (0 outside the array) —
-    the alignment primitive shared by native_hist_increase and the
-    delta-exponential accumulation."""
-    idx = i - off + F.lit(1)
-    return F.when(
-        idx >= 1, F.coalesce(F.try_element_at(arr, idx), F.lit(0))
-    ).otherwise(F.lit(0))
-
-
-def _nh_align_add(o1: Column, c1: Column, o2: Column, c2: Column):
-    """Offset-aligned element-wise ADDITION of two dense bucket arrays
-    (the + mirror of native_hist_increase's aligned subtraction).
-    Returns (offset, counts); empty+empty stays empty."""
-    e1, e2 = F.size(c1) == 0, F.size(c2) == 0
-    lo = F.when(e1, o2).when(e2, o1).otherwise(F.least(o1, o2))
-    hi = F.when(e1, o2 + F.size(c2)).when(e2, o1 + F.size(c1)).otherwise(
-        F.greatest(o1 + F.size(c1), o2 + F.size(c2))
-    )
-    counts = F.when(
-        hi > lo,
-        F.transform(
-            F.sequence(lo, hi - 1),
-            lambda i: _nh_at(o1, c1, i) + _nh_at(o2, c2, i),
-        ),
-    ).otherwise(F.expr("CAST(array() AS array<bigint>)"))
-    return lo, counts
-
-
 def otlp_delta_exp_hist_to_cumulative(
     points: DataFrame,
     *,
@@ -3725,31 +3375,22 @@ def otlp_delta_exp_hist_to_cumulative(
     )
     snaps = F.collect_list(F.when(F.col("__multi"), snap)).over(run_w)
 
-    def merge(acc, x):
-        target = F.least(acc["scale"], x["scale"])
-        apo, apc = _nh_downscale(
-            acc["po"], acc["pc"], (acc["scale"] - target).cast("int"))
-        ano, anc = _nh_downscale(
-            acc["no"], acc["nc"], (acc["scale"] - target).cast("int"))
-        xpo, xpc = _nh_downscale(
-            x["po"], x["pc"], (x["scale"] - target).cast("int"))
-        xno, xnc = _nh_downscale(
-            x["no"], x["nc"], (x["scale"] - target).cast("int"))
-        po, pc = _nh_align_add(apo, apc, xpo, xpc)
-        no, nc = _nh_align_add(ano, anc, xno, xnc)
-        return F.struct(
-            target.alias("scale"),
-            po.cast("int").alias("po"), pc.alias("pc"),
-            no.cast("int").alias("no"), nc.alias("nc"),
-        )
-
-    folded = F.aggregate(
-        F.slice(snaps, 2, F.greatest(F.size(snaps) - 1, F.lit(0)).cast("int")),
-        F.element_at(snaps, 1),
-        merge,
-    )
-    base = base.withColumn(
-        "__folded", F.when(F.col("__multi"), folded)
+    # the fold step: both sides downscale to the coarser scale, then
+    # each bucket side adds offset-aligned
+    target = "least(__acc.scale, __y.scale)"
+    d_acc = f"CAST(__acc.scale - {target} AS INT)"
+    d_y = f"CAST(__y.scale - {target} AS INT)"
+    po, pc = _nh_align_add(*_nh_downscale("__acc.po", "__acc.pc", d_acc),
+                           *_nh_downscale("__y.po", "__y.pc", d_y))
+    no, nc = _nh_align_add(*_nh_downscale("__acc.no", "__acc.nc", d_acc),
+                           *_nh_downscale("__y.no", "__y.nc", d_y))
+    merge = (f"named_struct('scale', {target}, 'po', CAST({po} AS INT), "
+             f"'pc', {pc}, 'no', CAST({no} AS INT), 'nc', {nc})")
+    base = base.withColumn("__snaps", snaps).withColumn(
+        "__folded",
+        F.expr("CASE WHEN __multi THEN aggregate(slice(__snaps, 2, CAST("
+               "greatest(size(__snaps) - 1, 0) AS INT)), element_at("
+               f"__snaps, 1), (__acc, __y) -> {merge}) END"),
     )
     # --- equal-scale fast path: absolute-index grid + running sums
     fast = base.where((F.col("__checked") == 1) & ~F.col("__multi"))
@@ -3767,12 +3408,10 @@ def otlp_delta_exp_hist_to_cumulative(
     )
     g2 = grid.select(
         *scols, "__rn", "__i",
-        F.sum(
-            _nh_at(F.col("pos_offset"), F.col("pos_counts"), F.col("__i"))
-        ).over(gi_w).alias("__pcum"),
-        F.sum(
-            _nh_at(F.col("neg_offset"), F.col("neg_counts"), F.col("__i"))
-        ).over(gi_w).alias("__ncum"),
+        F.sum(F.expr(_nh_at("pos_offset", "pos_counts", "__i")))
+        .over(gi_w).alias("__pcum"),
+        F.sum(F.expr(_nh_at("neg_offset", "neg_counts", "__i")))
+        .over(gi_w).alias("__ncum"),
     )
     asm = g2.groupBy(*scols, "__rn").agg(
         F.map_from_entries(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from prom_etl_db_spark.operators import promql
+from prom_etl_db_spark.operators.native_hist import _q, _str
 
 class HistVector:
     """An INSTANT NATIVE-HISTOGRAM vector riding the evaluator (r10):
@@ -83,17 +84,10 @@ def _native_selector_stream(ctx: EvalContext, sel: Selector) -> DataFrame:
                 f"INTERVAL {_interval_str(sel.offset, allow_negative=True)}"
             ),
         )
-    df = df.withColumn(
-        "labels",
-        F.map_concat(
-            F.map_filter(F.col("labels"), lambda k, _: k != "__name__"),
-            F.create_map(
-                F.lit("__name__"),
-                F.coalesce(F.col("metric_name"), F.lit("")),
-            ),
-        ),
-    )
-    return df.select("ts", *_nh_cols_of(df))
+    labels = ("map_concat(map_filter(labels, (k, v) -> k != '__name__'), "
+              "map('__name__', coalesce(metric_name, ''))) AS labels")
+    return df.selectExpr(
+        "ts", *[labels if c == "labels" else _q(c) for c in _nh_cols_of(df)])
 
 
 def _native_instant_vector(ctx: EvalContext, sel: Selector) -> HistVector:
@@ -125,7 +119,7 @@ def _native_instant_vector(ctx: EvalContext, sel: Selector) -> HistVector:
 def _native_range_fn(ctx: EvalContext, fn: str, sel: Selector):
     """``rate()`` / ``increase()`` / ``delta()`` / ``irate()`` /
     ``idelta()`` over a native range selector — lowers onto the gated
-    combinators (`promql.native_hist_increase`,
+    combinators (`native_hist.native_hist_increase`,
     `native_hist.native_hist_rate`) and returns a HistVector;
     ``resets()`` / ``changes()`` (r11) return a FLOAT vector from the
     consecutive-pair counters. The other range functions have no
@@ -163,7 +157,7 @@ def _native_range_fn(ctx: EvalContext, fn: str, sel: Selector):
         fn = {"irate": "rate", "idelta": "delta"}[fn]
     if fn in ("increase", "delta"):
         # delta = the gauge form: same endpoint machinery, no reset
-        inc = promql.native_hist_increase(
+        inc = NH.native_hist_increase(
             raw, counter=(fn == "increase")).where(
             F.col("dt_seconds") > 0)
         out = inc.select(
@@ -174,20 +168,15 @@ def _native_range_fn(ctx: EvalContext, fn: str, sel: Selector):
               else []),
         )
         return HistVector(out)
-    rates = NH.native_hist_rate(raw).where(F.col("dt_seconds") > 0)
+    rates = NH.native_hist_rate(raw).where("dt_seconds > 0")
     # rename the per-second shape back onto the dense-frame contract so
     # sum by / quantile compose without knowing they hold a FLOAT
     # histogram (count arrays are doubles — native_hist_sum_by merges
     # them type-generically)
-    out = rates.select(
-        "labels", "schema", "zero_threshold",
-        F.col("zero_rate").alias("zero_count"),
-        F.col("count_rate").alias("count"),
-        F.col("sum_rate").alias("sum"),
-        "pos_offset",
-        F.col("pos_rates").alias("pos_counts"),
-        "neg_offset",
-        F.col("neg_rates").alias("neg_counts"),
+    out = rates.selectExpr(
+        "labels", "schema", "zero_threshold", "zero_rate AS zero_count",
+        "count_rate AS `count`", "sum_rate AS `sum`", "pos_offset",
+        "pos_rates AS pos_counts", "neg_offset", "neg_rates AS neg_counts",
         *(["custom_values"] if "custom_values" in rates.columns
           else []),
     )
@@ -979,28 +968,18 @@ def _native_agg(ctx: EvalContext, node: Agg, vec: HistVector) -> HistVector:
     # group columns are PREFIXED: a by-label named like a histogram
     # column ("schema", "count", "sum" are legal PromQL label names)
     # must not overwrite the component it shadows (r10 review fix)
-    gcols = [f"__g_{k}" for k in by]
-    for k, g in zip(by, gcols):
-        df = df.withColumn(g, F.coalesce(F.col("labels")[k], F.lit("")))
+    keys = [f"__g_{k}" for k in by]
+    groups = [f"coalesce(labels[{_str(k)}], '') AS {_q(g)}"
+              for k, g in zip(by, keys)]
     if not by:
         # sum(h): one global group — constant key, dropped after
-        df = df.withColumn("__all", F.lit(1))
-    keys = tuple(gcols) if by else ("__all",)
-    merged = merge(df.select(*keys, *[c for c in _nh_cols_of(df)
-                                      if c != "labels"]), tuple(keys))
+        keys, groups = ["__all"], ["1 AS __all"]
+    merged = merge(df.selectExpr(*groups, *[_q(c) for c in _nh_cols_of(df)
+                                            if c != "labels"]), tuple(keys))
     labels = (
-        F.map_from_arrays(
-            F.array(*[F.lit(k) for k in by]),
-            F.array(*[F.col(g).cast("string") for g in gcols]),
-        )
-        if by
-        else F.expr("CAST(map() AS map<string,string>)")
-    )
-    return HistVector(merged.select(
-        labels.alias("labels"), "schema", "zero_threshold", "zero_count",
-        "count", "sum", "pos_offset", "pos_counts",
-        "neg_offset", "neg_counts",
-        *(["custom_values"] if "custom_values" in merged.columns
-          else []),
-    ))
+        f"map_from_arrays(array({', '.join(map(_str, by))}), "
+        f"array({', '.join(f'CAST({_q(g)} AS STRING)' for g in keys)}))"
+        if by else "CAST(map() AS map<string,string>)")
+    return HistVector(merged.selectExpr(
+        f"{labels} AS labels", *map(_q, _nh_cols_of(merged)[1:])))
 

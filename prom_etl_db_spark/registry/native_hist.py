@@ -384,7 +384,7 @@ def nhcb_increase_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("schema"), "zero_count", "pos_offset", "pos_counts",
         "custom_values",
     )
-    inc = promql.native_hist_increase(pts)
+    inc = NH.native_hist_increase(pts)
     # the increase histogram's total = zero-bucket growth + bucket sums
     inc = inc.withColumn(
         "count",
@@ -1214,7 +1214,7 @@ def native_hist_neg_increase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pos_offset", "pos_counts",
         "neg_offset", "neg_counts",
     )
-    inc = promql.native_hist_increase(pts)
+    inc = NH.native_hist_increase(pts)
     n = F.size("neg_counts")
     ex = inc.select(
         F.col("labels")["eid"].cast("long").alias("push_id"),

@@ -21,6 +21,7 @@ import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from prom_etl_db_spark.operators import native_hist as NH
 from prom_etl_db_spark.operators import promql  # noqa: F401
 from prom_etl_db_spark.registry.core import (  # noqa: F401
     FLAGSHIP_DAY,
@@ -683,7 +684,7 @@ def native_hist_rate_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pos_offset",
         "pos_counts",
     )
-    inc = promql.native_hist_increase(pts)
+    inc = NH.native_hist_increase(pts)
     # native convention: zero bucket at base^(offset-1), bucket k's
     # upper bound base^(offset+k); '+Inf' carries the total
     inv = F.pow(F.lit(2.0), -F.col("schema").cast("double"))
@@ -846,7 +847,7 @@ def native_hist_downscale_increase(spark: SparkSession, sf_dir: str) -> DataFram
         "pos_offset",
         "pos_counts",
     )
-    inc = promql.native_hist_increase(pts)
+    inc = NH.native_hist_increase(pts)
     inv = F.pow(F.lit(2.0), -F.col("schema").cast("double"))
     nb = F.size(F.col("pos_counts"))
     les = F.concat(

@@ -450,7 +450,7 @@ def streaming_delta_hist(points: DataFrame) -> DataFrame:
 
 
 def _py_nh_downscale(offset: int, counts: list[int], d: int):
-    """Python twin of ``operators.promql._nh_downscale`` (fine bucket
+    """Python twin of ``operators.native_hist._nh_downscale`` (fine bucket
     i folds into coarse ⌈i/2^d⌉) — the streaming state fold needs the
     merge algebra driver-side; semantics pinned equal to the Column
     form by the restart tests."""
@@ -466,7 +466,7 @@ def _py_nh_downscale(offset: int, counts: list[int], d: int):
 
 
 def _py_nh_align_add(o1: int, c1: list[int], o2: int, c2: list[int]):
-    """Python twin of ``operators.promql._nh_align_add`` — offset-
+    """Python twin of ``operators.native_hist._nh_align_add`` — offset-
     aligned element-wise addition with union span; empty+empty keeps
     the newer offset with an empty array."""
     if not c1 and not c2:

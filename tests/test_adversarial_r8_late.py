@@ -170,15 +170,13 @@ def _nh_series_df(spark, rows):
 def test_nhcb_increase_matching_boundaries(spark):
     from datetime import datetime
 
-    from prom_etl_db_spark.operators import promql
-
     df = _nh_series_df(spark, [
         {"ts": datetime(2024, 1, 1, 0, 0), "pos_counts": [2, 1, 0],
          "custom_values": [0.5, 2.0]},
         {"ts": datetime(2024, 1, 1, 0, 1), "pos_counts": [5, 1, 2],
          "custom_values": [0.5, 2.0]},
     ])
-    (r,) = promql.native_hist_increase(df).collect()
+    (r,) = NH.native_hist_increase(df).collect()
     assert r["schema"] == -53 and r["reset"] is False
     assert r["pos_counts"] == [3, 0, 2]
     assert r["custom_values"] == [0.5, 2.0]
@@ -187,8 +185,6 @@ def test_nhcb_increase_matching_boundaries(spark):
 def test_nhcb_increase_changed_boundaries_refuses(spark):
     from datetime import datetime
 
-    from prom_etl_db_spark.operators import promql
-
     df = _nh_series_df(spark, [
         {"ts": datetime(2024, 1, 1, 0, 0), "pos_counts": [2],
          "custom_values": [0.5]},
@@ -196,7 +192,7 @@ def test_nhcb_increase_changed_boundaries_refuses(spark):
          "custom_values": [0.75]},
     ])
     with pytest.raises(Exception, match="custom_values changed"):
-        promql.native_hist_increase(df).collect()
+        NH.native_hist_increase(df).collect()
     mixed = _nh_series_df(spark, [
         {"ts": datetime(2024, 1, 1, 0, 0), "pos_counts": [2],
          "custom_values": [0.5]},
@@ -204,7 +200,7 @@ def test_nhcb_increase_changed_boundaries_refuses(spark):
          "pos_counts": [5], "custom_values": []},
     ])
     with pytest.raises(Exception, match="bucket families"):
-        promql.native_hist_increase(mixed).collect()
+        NH.native_hist_increase(mixed).collect()
 
 
 def _otlp_sum_df(spark, series):

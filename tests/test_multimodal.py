@@ -1096,3 +1096,27 @@ def test_image_transform_features_known_tiny(spark):
     # and the BMP roundtrip under the transforms is bit-exact
     px = np.arange(24, dtype=np.uint8).reshape(2, 4, 3)
     assert np.array_equal(bmp_pixels(encode_bmp(px[:, ::-1])), px[:, ::-1])
+
+
+def test_png_header_geometry_checked_before_allocation():
+    """An IHDR whose width/height disagree with the inflated IDAT length
+    refuses with ValueError before any pixel buffer is allocated (a
+    bit-flipped header once asked numpy for 27 GiB), and a zero width
+    or height refuses too."""
+    import zlib
+
+    import pytest
+
+    from prom_etl_db_spark.functions.multimodal import _png_chunk, png_pixels
+
+    def png(w, h):
+        ihdr = w.to_bytes(4, "big") + h.to_bytes(4, "big") + bytes(
+            (8, 2, 0, 0, 0))
+        idat = zlib.compress(bytes([0, 1, 2, 3]))  # one 1x1 RGB row
+        return (b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
+                + _png_chunk(b"IDAT", idat) + _png_chunk(b"IEND", b""))
+
+    assert png_pixels(png(1, 1)).tolist() == [[[1, 2, 3]]]
+    for w, h in ((1 << 31, 1 << 14), (1, 2), (2, 1), (0, 1), (1, 0)):
+        with pytest.raises(ValueError):
+            png_pixels(png(w, h))

@@ -1179,7 +1179,7 @@ def test_native_hist_increase_alignment_and_reset(spark):
     dt_seconds from the endpoint timestamps."""
     from datetime import datetime
 
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         # series 'grow': offset shifts down 3->2 as a bucket appears
@@ -1215,7 +1215,7 @@ def test_native_hist_increase_downscales_mixed_schemas(spark):
     fine bucket i folds into coarse ceil(i/2^d)) — both directions."""
     from datetime import datetime
 
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         # fine (schema 2) first, coarse (schema 1) second:
@@ -1247,7 +1247,7 @@ def test_native_hist_increase_zero_reset_and_single_sample(spark):
     (first == last) yields a zero increase, not an error."""
     from datetime import datetime
 
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         ({"s": "z"}, datetime(2024, 1, 1, 0, 0), 0, 5, 0, [1]),

@@ -28,7 +28,7 @@ T1 = datetime(2024, 1, 29, 0, 5)
 def test_neg_increase_aligned_diff(spark):
     """Growth on both sides: the increase is the aligned diff on BOTH
     sides, including a neg offset shift (absent buckets count 0)."""
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         Row(labels={"n": "s"}, ts=T0, schema=0, zero_count=1,
@@ -51,7 +51,7 @@ def test_neg_only_reset_detected(spark):
     """A drop visible ONLY in the negative buckets (pos grows, zero
     holds) is a counter reset: increase = the LAST sample verbatim on
     both sides. Pre-r10 this went undetected."""
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         Row(labels={"n": "s"}, ts=T0, schema=0, zero_count=1,
@@ -71,7 +71,7 @@ def test_neg_only_reset_detected(spark):
 def test_neg_increase_downscales_with_schema_change(spark):
     """A mid-series schema change downscales BOTH sides to the coarser
     schema before subtracting (fine bucket i folds into ⌈i/2^d⌉)."""
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         # schema 1 (fine): neg buckets at indices 1..2
@@ -93,7 +93,7 @@ def test_neg_increase_downscales_with_schema_change(spark):
 def test_neg_increase_null_neg_arrays_read_as_empty(spark):
     """Rows decoded from sources without a negative side may carry
     NULL neg arrays — they read as empty (count 0), not NULL-poison."""
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         Row(labels={"n": "s"}, ts=T0, schema=0, zero_count=0,
@@ -111,7 +111,7 @@ def test_neg_increase_null_neg_arrays_read_as_empty(spark):
 def test_pos_only_input_schema_unchanged(spark):
     """A frame WITHOUT neg columns keeps the r9 output schema exactly
     (existing call sites select pos-only columns first)."""
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         Row(labels={"n": "s"}, ts=T0, schema=0, zero_count=0,

@@ -611,3 +611,43 @@ def test_irate_idelta_use_last_two_samples(spark, samples):
                        native_hists=nh, native_metrics=frozenset({"h"}))
     (r2,) = out2.collect()
     assert r2["value"] == pytest.approx(4 / 60)
+
+
+_FLAGSHIP = "histogram_quantile(0.9, sum by (job) (rate(h[10m])))"
+
+
+def _py4j_calls(spark, build):
+    """py4j round trips ``build()`` makes, counted on the gateway
+    client without py4j's own garbage-collection commands (``m\\nd\\n``)."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, n = client.send_command, [0]
+
+    def counted(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            n[0] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counted
+    try:
+        build()
+    finally:
+        client.send_command = send
+    return n[0]
+
+
+def test_flagship_build_py4j_budget(spark, samples, nh):
+    """The native kernels and their lowering are SQL text applied in a
+    few projections, so building the flagship plan costs ~560 py4j
+    round trips (the Column-tree kernels cost ~10k)."""
+    _eval(samples, nh, _FLAGSHIP)  # schemas and functions resolved once
+    calls = _py4j_calls(spark, lambda: _eval(samples, nh, _FLAGSHIP))
+    assert calls <= 750, calls
+
+
+def test_flagship_prefix_sums_once_in_plan(spark, samples, nh):
+    """The quantile's O(n²) prefix-sum fold is a staged column: the
+    optimized plan holds it once for the one row pipeline, not once per
+    use of the crossing position."""
+    plan = (_eval(samples, nh, _FLAGSHIP)._jdf.queryExecution()
+            .optimizedPlan().toString())
+    assert plan.count("lambdafunction(concat(") == 1

@@ -4,8 +4,9 @@ The Python twins (`_py_nh_downscale` / `_py_nh_align_add` — the
 streaming folds' driver-side algebra, pinned equal to the Column forms
 by the r9 restart tests and the differential below) carry the
 hypothesis load at full example counts; one batched Spark differential
-pins the Column forms against them over seeded-random cases in a
-single job (per-example Spark jobs would be prohibitively slow)."""
+pins the SQL-template forms against them over seeded-random and edge
+cases in a single job (per-example Spark jobs would be prohibitively
+slow)."""
 
 from __future__ import annotations
 
@@ -79,13 +80,13 @@ def test_align_add_commutes_and_conserves(o1, c1, o2, c2):
         assert c == a + b
 
 
-def test_column_forms_match_python_twins(spark):
-    """Batched differential: 60 seeded-random cases through the Column
+def test_sql_templates_match_python_twins(spark):
+    """Batched differential: seeded-random cases plus the edge rows —
+    every d in 0..6 over negative offsets, empty arrays, and a
+    4,096-bucket row (the decoder's guard) — through the SQL-template
     `_nh_downscale` / `_nh_align_add` in ONE Spark job, compared
     against the Python twins row by row."""
-    from pyspark.sql import functions as F
-
-    from prom_etl_db_spark.operators.promql import (
+    from prom_etl_db_spark.operators.native_hist import (
         _nh_align_add,
         _nh_downscale,
     )
@@ -102,24 +103,29 @@ def test_column_forms_match_python_twins(spark):
             [int(x) for x in rng.randint(0, 50, n2)],
             int(rng.randint(0, 5)),
         ))
+    for d in range(7):
+        for off in (-37, -8, -1, 0, 5):
+            rows.append((len(rows), off,
+                         [int(x) for x in rng.randint(0, 50, 11)],
+                         -off, [], d))
+        rows.append((len(rows), -3, [], 4, [1, 2], d))
+    big = [int(x) for x in rng.randint(0, 1000, 4096)]
+    for d in (1, 6):
+        rows.append((len(rows), -2049, big, 7, big[:5], d))
     df = spark.createDataFrame(
         rows, "i int, o1 int, c1 array<bigint>, o2 int, "
               "c2 array<bigint>, d int")
-    do, dc = _nh_downscale(F.col("o1"), F.col("c1"), F.col("d"))
-    ao, ac = _nh_align_add(
-        F.col("o1"), F.col("c1"), F.col("o2"), F.col("c2"))
+    do, dc = _nh_downscale("o1", "c1", "d")
+    ao, ac = _nh_align_add("o1", "c1", "o2", "c2")
     got = {
-        r["i"]: r for r in df.select(
-            "i", do.alias("do"), dc.alias("dc"),
-            ao.alias("ao"), ac.alias("ac")).collect()
+        r["i"]: r for r in df.selectExpr(
+            "i", f"{do} AS do", f"{dc} AS dc",
+            f"{ao} AS ao", f"{ac} AS ac").collect()
     }
     for i, o1, c1, o2, c2, d in rows:
-        po, pc = _py_nh_downscale(o1, c1, d)
         r = got[i]
-        if c1:
-            assert (r["do"], list(r["dc"])) == (po, pc), f"case {i}"
-        else:
-            assert list(r["dc"] or []) == []
+        assert (r["do"], list(r["dc"])) == _py_nh_downscale(o1, c1, d), \
+            f"case {i}"
         qo, qc = _py_nh_align_add(o1, c1, o2, c2)
         assert list(r["ac"] or []) == qc, f"case {i}"
         if qc:

@@ -31,7 +31,7 @@ FLOAT_NH = (
 def test_float_flavor_increase_resolves_and_matches(spark):
     """increase() over array<double> counts (wire FLOAT flavor) must
     resolve and produce the same aligned diff the integer path does."""
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         Row(labels={"n": "s"}, ts=T0, schema=0, zero_count=1.0,
@@ -52,7 +52,7 @@ def test_float_flavor_increase_resolves_and_matches(spark):
 def test_float_flavor_downscale_schema_change(spark):
     """The downscale fold's zero value follows the element type — a
     float frame with a mid-series schema change exercises it."""
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         Row(labels={"n": "s"}, ts=T0, schema=1, zero_count=0.0,
@@ -99,7 +99,7 @@ def test_empty_neg_side_adopts_other_offset(spark):
     far-offset other endpoint must NOT widen the aligned span to
     [0, hi) — the empty side adopts the other side's offset, so the
     output array covers only the occupied span."""
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     rows = [
         Row(labels={"n": "s"}, ts=T0, schema=0, zero_count=0,
@@ -139,7 +139,7 @@ def test_increase_span_bomb_guard(spark):
     dense array spanning the gap."""
     import pytest as _pt
 
-    from prom_etl_db_spark.operators.promql import native_hist_increase
+    from prom_etl_db_spark.operators.native_hist import native_hist_increase
 
     schema = (
         "labels map<string,string>, ts timestamp, schema int, "

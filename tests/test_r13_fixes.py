@@ -133,3 +133,24 @@ def test_snappy_want_bomb_guard():
         RW.snappy_decompress(bomb)
     with pytest.raises(ValueError):
         RW.snappy_decompress_py(bomb)
+
+
+def test_zero_length_span_without_counts_is_an_empty_side():
+    # one zero-length BucketSpan and no deltas (an empty span
+    # submessage) decodes to the empty-side shape, not an IndexError
+    assert RW._dense_buckets([(0, 0)], [], "positive") == (0, [])
+    assert RW._dense_buckets([(5, 0), (2, 0)], [], "negative") == (0, [])
+    h = {"schema": 3, "zero_threshold": 0.001, "zero_count": 2,
+         "count": 2, "positive_spans": [(0, 0)], "positive_deltas": [],
+         "timestamp": 1706572800000}
+    series = [{"labels": {"__name__": "h"}, "samples": [], "histograms": [h]}]
+    (out,) = RW.decode_write_request_v2(RW.encode_write_request_v2(series))
+    got = out["histograms"][0]
+    assert (got["pos_offset"], got["pos_counts"]) == (0, [])
+    assert got["zero_count"] == 2
+
+
+def test_enc_len_field_numbers_past_the_header_table():
+    # field numbers >= 32 fall back to the generic field header
+    for num in (31, 32, 33, 200, 5000):
+        assert RW._enc_len(num, b"ab") == RW._enc_field(num, 2) + b"\x02ab"

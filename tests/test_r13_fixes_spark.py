@@ -196,10 +196,10 @@ def test_sum_by_join_stats_refusals_match_window(spark):
                     df, ("metric_name",), group_stats=gs).collect()
 
 
-def test_sum_by_fused_sides_matches_per_side_all_combos(spark):
-    """The r13 fused side pipeline must be result-identical to the
-    per-side form across group_stats shapes, empty sides, NHCB groups,
-    and the float flavor."""
+def test_sum_by_pinned_rows_both_group_stats(spark):
+    """The fused side pipeline's output, pinned: both group_stats
+    shapes give the same five rows across mixed schemas, an entirely
+    empty neg side (m2), an NHCB group, and NULL sums."""
     rows = []
     for g in range(4):
         for i in range(6):
@@ -224,18 +224,14 @@ def test_sum_by_fused_sides_matches_per_side_all_combos(spark):
             tuple(tuple(v) if isinstance(v, list) else v for v in r)
             for r in frame.collect())
 
-    orig = NH._FUSED_SIDES
-    try:
-        outs = {}
-        for fused in (False, True):
-            NH._FUSED_SIDES = fused
-            for gs in ("window", "join"):
-                outs[(fused, gs)] = canon(
-                    NH.native_hist_sum_by(df, ("metric_name",),
-                                          group_stats=gs))
-        ref = outs[(False, "window")]
-        assert len(ref) == 5
-        for k, v in outs.items():
-            assert v == ref, k
-    finally:
-        NH._FUSED_SIDES = orig
+    exp_row = (0, 0.001, 3, 75, 15.0, -1, (2, 12, 28, 2, 4, 3), 0)
+    want = [
+        ("m0", *exp_row, (3, 15, 3), (), 6),
+        ("m1", *exp_row, (3, 15, 3), (), 6),
+        ("m2", *exp_row, (), (), 6),
+        ("m3", *exp_row, (3, 15, 3), (), 6),
+        ("nhcb", -53, 0.0, 0, 18, None, 0, (3, 3), 0, (), (0.5, 2.0), 3),
+    ]
+    for gs in ("window", "join"):
+        assert canon(NH.native_hist_sum_by(
+            df, ("metric_name",), group_stats=gs)) == want, gs

@@ -28,6 +28,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from prom_etl_db_spark.operators import native_hist as NH
 from prom_etl_db_spark.operators import promql
 from prom_etl_db_spark.registry.rw2_aux import ct_increase
 
@@ -130,7 +131,7 @@ def test_nhcb_increase_inf_bucket_presence_differs(spark):
             zero_count=0, pos_offset=0, pos_counts=[5, 4, 3],
             custom_values=cv),                          # +Inf present
     ]
-    (r,) = promql.native_hist_increase(_nhcb_df(spark, rows)).collect()
+    (r,) = NH.native_hist_increase(_nhcb_df(spark, rows)).collect()
     assert not r["reset"]
     assert r["pos_offset"] == 0
     assert list(r["pos_counts"]) == [3, 3, 3]  # [5-2, 4-1, 3-0]
@@ -145,7 +146,7 @@ def test_nhcb_increase_inf_bucket_presence_differs(spark):
             zero_count=0, pos_offset=0, pos_counts=[5, 4],
             custom_values=cv),
     ]
-    (r2,) = promql.native_hist_increase(_nhcb_df(spark, rows_rev)).collect()
+    (r2,) = NH.native_hist_increase(_nhcb_df(spark, rows_rev)).collect()
     assert r2["reset"] and list(r2["pos_counts"]) == [5, 4]
 
 

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from prom_etl_db_spark.functions import clustering, dedup, sampling, similarity
 from prom_etl_db_spark.functions import text as textfn
+from prom_etl_db_spark.operators import native_hist as NH
 from prom_etl_db_spark.operators import promql
 from prom_etl_db_spark.session import get_spark
 from prom_etl_db_spark.sources.tables import load_table
@@ -841,7 +842,7 @@ def probe(spark, sf_dir: str, k: int) -> dict[str, tuple[float, int]]:
         F.timestamp_millis(F.col("timestamp_ms")).alias("ts"),
         F.col("schema"), "zero_count", "pos_offset", "pos_counts",
     )
-    run("native_hist_increase", promql.native_hist_increase(_inc_pts))
+    run("native_hist_increase", NH.native_hist_increase(_inc_pts))
 
     # later r8: float flavor, NHCB → quantile, stats family, exemplars,
     # CT-aware increase — all one-decode compositions over the same ev.
@@ -1572,8 +1573,6 @@ def probe_groupsize(spark, n_groups: int, sizes: list[int]) -> None:
     histograms, schemas varying 0..2 WITHIN each group so the
     downscale-to-coarsest window does real work, offsets drifting ±2
     to exercise the union span."""
-    from prom_etl_db_spark.operators import native_hist as NH
-
     results: dict[int, dict[str, tuple[float, int]]] = {}
     for spg in sizes:
         times: dict[str, tuple[float, int]] = {}
