@@ -1,5 +1,5 @@
-"""Prometheus remote-write ingestion: protobuf wire format + snappy
-block format, both implemented from their public specifications.
+"""Prometheus remote-write ingestion: protobuf wire format, implemented
+from its public specification, over snappy block compression.
 
 Reference scope: samzong/prom-etl-db PULLS from the Prometheus HTTP
 query API (internal/prometheus/client.go); remote-write is the PUSH
@@ -11,21 +11,17 @@ agents write remote-write payloads into object storage, and this
 module turns those payloads into the SAME sample records the pull
 path produces (``ingest.py`` shapes).
 
-From-scratch, spec-level implementations (the repo's codec rule —
-no protobuf/snappy libraries exist in this environment):
-
 - **protobuf wire format** (developers.google.com/protocol-buffers/
-  docs/encoding): varints, field headers ``(field_num << 3) | wire``,
+  docs/encoding), from scratch — no protobuf library exists in this
+  environment: varints, field headers ``(field_num << 3) | wire``,
   length-delimited submessages, fixed64 doubles. The subset is exactly
   ``prompb.WriteRequest``: WriteRequest.timeseries = 1 (LEN);
   TimeSeries.labels = 1 (LEN), .samples = 2 (LEN); Label.name = 1,
   .value = 2 (LEN); Sample.value = 1 (fixed64 double),
   .timestamp = 2 (varint int64, two's-complement per proto3 ``int64``).
-- **snappy block format** (github.com/google/snappy format_description
-  .txt): uvarint uncompressed length, then literal (tag 00, 1-byte
-  lengths plus the 60–63 extended forms) and copy elements (tag 01
-  with 3-bit length + 11-bit offset, tag 10 with 2-byte offset, tag 11
-  with 4-byte offset), overlapping copies byte-by-byte (the RLE case).
+- **snappy block format** (github.com/google/snappy
+  format_description.txt) through pyarrow's bundled C snappy, behind
+  a declared-length bomb guard.
 
 Both an encoder and a decoder are provided: the encoder builds
 fixtures and tests the decoder (the BMP/WAV roundtrip discipline);
@@ -44,6 +40,7 @@ import struct
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -99,153 +96,37 @@ def _enc_uvarint(n: int) -> bytes:
 
 # --- snappy block format ----------------------------------------------------
 
-# pyarrow gate (r12 optimization round — the zstd/LZ4 pattern applied to
-# the hottest codec): pyarrow's bundled C snappy implements the same raw
-# BLOCK format (uvarint length header + elements) and interoperates with
-# the from-scratch codec in BOTH directions (pinned by
-# tests/test_remote_write.py::test_snappy_pyarrow_interop). The public
-# functions dispatch to it when present — profiled at sf0.1 the pure
-# loops cost ~0.38 s CPU per 5k wire payloads, multiplied across every
-# fixture build and decode of the ~45 wire gate queries — and fall back
-# to the from-scratch reference (still the spec implementation the
-# hand-vector and fuzz tests exercise directly) when pyarrow lacks
-# snappy. Errors are re-raised as ValueError so both paths refuse with
-# the same exception type; the interop test pins roundtrips and
-# truncation refusals in both directions (no oracle hashes compressed
-# bytes, so only decoded-payload equality matters on the wire).
-try:  # pragma: no cover - environment probe
-    import pyarrow as _pa
-
-    _SNAPPY = _pa.Codec("snappy") if _pa.Codec.is_available("snappy") else None
-except Exception:  # pragma: no cover
-    _SNAPPY = None
+# pyarrow's bundled C snappy implements the raw BLOCK format; its
+# errors are re-raised as ValueError (the corrupt-stream convention).
+_SNAPPY = pa.Codec("snappy")
 
 
 def snappy_decompress(data: bytes) -> bytes:
     """The snappy BLOCK format (what remote-write mandates — not the
-    framing format). Dispatches to pyarrow's C snappy when available;
-    ``snappy_decompress_py`` is the from-scratch reference."""
-    if _SNAPPY is not None:
-        want, _ = _uvarint(data, 0)  # validates the header loudly
-        # bomb guard (the repo's convention): the densest element is a
-        # copy2 (3 bytes → up to 64 output bytes), so no valid stream
-        # expands past 64/3 of its size — refuse before pre-allocating
-        # an attacker-declared buffer. The pure-Python reference never
-        # pre-allocates, so it needs no cap.
-        if want > (len(data) * 64) // 3 + 64:
-            raise ValueError(
-                f"snappy: declared {want} bytes exceeds the max possible "
-                f"expansion of a {len(data)}-byte stream")
-        try:
-            out = _SNAPPY.decompress(data, decompressed_size=want,
-                                     asbytes=True)
-        except ValueError:
-            raise
-        except Exception as e:
-            raise ValueError(f"snappy: {e}") from e
-        if len(out) != want:
-            raise ValueError(
-                f"snappy: declared {want} bytes, produced {len(out)}")
-        return out
-    return snappy_decompress_py(data)
+    framing format), decoded by pyarrow's C snappy."""
+    want, _ = _uvarint(data, 0)  # validates the header loudly
+    # bomb guard (the repo's convention): the densest element is a
+    # copy2 (3 bytes → up to 64 output bytes), so no valid stream
+    # expands past 64/3 of its size — refuse before pre-allocating
+    # an attacker-declared buffer.
+    if want > (len(data) * 64) // 3 + 64:
+        raise ValueError(
+            f"snappy: declared {want} bytes exceeds the max possible "
+            f"expansion of a {len(data)}-byte stream")
+    try:
+        out = _SNAPPY.decompress(data, decompressed_size=want,
+                                 asbytes=True)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"snappy: {e}") from e
+    if len(out) != want:
+        raise ValueError(
+            f"snappy: declared {want} bytes, produced {len(out)}")
+    return out
 
 
 def snappy_compress(data: bytes) -> bytes:
-    """Raw snappy block compression. Dispatches to pyarrow's C snappy
-    when available; ``snappy_compress_py`` is the from-scratch
-    reference. Any valid element mix decodes identically, so the two
-    encoders are interchangeable on the wire."""
-    if _SNAPPY is not None:
-        return _SNAPPY.compress(data, asbytes=True)
-    return snappy_compress_py(data)
-
-
-def snappy_decompress_py(data: bytes) -> bytes:
-    """The snappy BLOCK format (what remote-write mandates — not the
-    framing format)."""
-    want, pos = _uvarint(data, 0)
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        kind = tag & 0x03
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:  # 60..63: that many extra length bytes
-                extra = ln - 59
-                if pos + extra > n:
-                    raise ValueError(f"snappy: literal length truncated at {pos}")
-                ln = int.from_bytes(data[pos : pos + extra], "little")
-                pos += extra
-            ln += 1
-            if pos + ln > n:
-                raise ValueError(f"snappy: literal body truncated at {pos}")
-            out += data[pos : pos + ln]
-            pos += ln
-            continue
-        if kind == 1:  # copy, 1-byte offset tail
-            ln = ((tag >> 2) & 0x07) + 4
-            if pos >= n:
-                raise ValueError(f"snappy: copy1 truncated at {pos}")
-            off = ((tag & 0xE0) << 3) | data[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 2 > n:
-                raise ValueError(f"snappy: copy2 truncated at {pos}")
-            off = int.from_bytes(data[pos : pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 4 > n:
-                raise ValueError(f"snappy: copy4 truncated at {pos}")
-            off = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError(f"snappy: copy offset {off} out of range at {pos}")
-        for _ in range(ln):  # byte-by-byte: offsets < length overlap (RLE)
-            out.append(out[-off])
-    if len(out) != want:
-        raise ValueError(f"snappy: declared {want} bytes, produced {len(out)}")
-    return bytes(out)
-
-
-def snappy_compress_py(data: bytes) -> bytes:
-    """A VALID (not maximal) snappy encoder: greedy 4-byte hash
-    matching emitting copy2 elements, literals otherwise — enough to
-    exercise every decoder branch incl. overlapping copies; the spec
-    allows any element mix that reproduces the bytes."""
-    out = bytearray(_enc_uvarint(len(data)))
-    n = len(data)
-    table: dict[bytes, int] = {}
-    pos = lit_start = 0
-
-    def flush_literal(upto: int) -> None:
-        nonlocal lit_start
-        while lit_start < upto:
-            chunk = min(upto - lit_start, 60)
-            out.append((chunk - 1) << 2)
-            out.extend(data[lit_start : lit_start + chunk])
-            lit_start += chunk
-
-    while pos + 4 <= n:
-        key = data[pos : pos + 4]
-        cand = table.get(key)
-        table[key] = pos
-        if cand is not None and pos - cand <= 0xFFFF:
-            ln = 4
-            while pos + ln < n and ln < 64 and data[cand + ln] == data[pos + ln]:
-                ln += 1
-            flush_literal(pos)
-            out.append(((ln - 1) << 2) | 0x02)
-            out.extend((pos - cand).to_bytes(2, "little"))
-            pos += ln
-            lit_start = pos
-        else:
-            pos += 1
-    flush_literal(n)
-    return bytes(out)
+    """Raw snappy block compression by pyarrow's C snappy."""
+    return _SNAPPY.compress(data, asbytes=True)
 
 
 # --- protobuf: prompb.WriteRequest -------------------------------------------

@@ -87,8 +87,11 @@ def materialize(df: DataFrame) -> DataFrame:
     shared storage survives), else ``localCheckpoint`` (the local
     single-process posture, where executor loss is process death
     anyway and the local form skips the filesystem round-trip).
-    Production wiring is one line at session build:
-    ``spark.sparkContext.setCheckpointDir("hdfs://.../ckpt")``."""
+    Production wiring at session build: one line,
+    ``spark.sparkContext.setCheckpointDir("hdfs://.../ckpt")``, plus
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (set by
+    ``session.get_spark``) so the ContextCleaner deletes a checkpoint's
+    files once its frame is garbage-collected."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)

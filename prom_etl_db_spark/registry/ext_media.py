@@ -1249,20 +1249,17 @@ FROM documents
 """,
 )
 def payload_lz4_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E4 codec (r6): the LZ4 BLOCK format — the data-lake stack's
-    other workhorse codec (Parquet/Kafka/Spark io) — implemented from
-    the public spec like remote_write's snappy: strict decoder (all
-    token/extended-length/overlap-copy branches) + valid greedy
-    encoder honoring the end-of-block rules (literals-only final
-    sequence, mflimit). Every document's UTF-8 bytes round-trip
-    through compress→decompress with bit-identity asserted in-UDF;
-    the emitted length+md5 are decode-derived so the closed-form
-    oracle hash-checks the roundtrip. Fuzz gates in
-    tests/test_lz4.py. mapInPandas, zero shuffle."""
-    from prom_etl_db_spark.functions import lz4
+    """E4 codec (r6): the LZ4 block format — the data-lake stack's
+    other workhorse codec (Parquet/Kafka/Spark io) — through pyarrow's
+    ``lz4_raw`` (liblz4). Every document's UTF-8 bytes round-trip
+    through compress→decompress with bit-identity asserted in-UDF; the
+    emitted length+md5 are decode-derived so the closed-form oracle
+    hash-checks the roundtrip. No decoder for outside LZ4 blocks exists
+    (DIVERGENCES.md). mapInPandas, zero shuffle."""
+    from prom_etl_db_spark.functions import compression
 
     docs = _t(spark, sf_dir, "documents")
-    return lz4.lz4_roundtrip_features(docs)
+    return compression.roundtrip_features(docs, "lz4_raw")
 
 
 @register(
@@ -1275,26 +1272,18 @@ FROM documents
 """,
 )
 def payload_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E4 codec (r7, VERDICT r6 task #7): the zstd frame/block format
-    (RFC 8878) — the data-lake stack's DEFAULT codec (Parquet ZSTD
-    pages, Kafka, Spark io) — implemented as a from-scratch strict
-    decoder: frame headers, raw/RLE/compressed blocks, Huffman
-    literals (direct + FSE-coded weights, 1/4 streams, treeless
-    reuse), predefined/RLE/FSE/repeat sequence tables, the three-state
-    backward bitstream, repeat-offset history, XXH64 checksums. Each
-    document's UTF-8 bytes are compressed by REAL libzstd (pyarrow's
-    codec) and decoded by the from-scratch walk with bit-identity
-    asserted in-UDF (plus a raw/RLE-frame self-roundtrip); the emitted
-    length+md5 are decode-derived so the closed-form oracle
-    hash-checks the roundtrip. The interop gate in tests/test_zstd.py
-    spans compression levels 1-22 — the strongest verification of any
-    codec in the repo (the predefined FSE distributions are pinned
-    against libzstd's own tables, which caught a wrong ML default
-    tail). mapInPandas, zero shuffle."""
-    from prom_etl_db_spark.functions import zstd
+    """E4 codec (r7): zstd (RFC 8878) — the data-lake stack's DEFAULT
+    codec (Parquet ZSTD pages, Kafka, Spark io). Each document's UTF-8
+    bytes are compressed by libzstd (pyarrow's codec) and decoded by
+    ``compression.zstd_decompress``, the engine's streaming decoder for
+    outside zstd bytes, with bit-identity asserted in-UDF; the emitted
+    length+md5 are decode-derived so the closed-form oracle hash-checks
+    the roundtrip. Refusal gates: tests/test_zstd.py and
+    tests/test_codecs.py. mapInPandas, zero shuffle."""
+    from prom_etl_db_spark.functions import compression
 
     docs = _t(spark, sf_dir, "documents")
-    return zstd.zstd_roundtrip_features(docs)
+    return compression.roundtrip_features(docs, "zstd")
 
 
 @register(
@@ -1307,22 +1296,14 @@ FROM documents
 """,
 )
 def payload_zstd_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E4 codec (r8, VERDICT r7 #7 stretch): the zstd COMPRESSING
-    encoder — predefined-FSE sequences (the RFC's three default
-    distributions, encoded by inverting the verified decode tables)
-    over raw literals from a greedy LZ parse, raw-block fallback when
-    sequences don't pay. Closes the valid-not-compressing asymmetry
-    DIVERGENCES.md carried since r7. Each document's DOUBLED UTF-8
-    bytes (doubling guarantees matches, so a silent raw-only fallback
-    FAILS in-UDF rather than under-compressing quietly) are compressed
-    by this encoder and decoded by REAL libzstd (pyarrow) AND the
-    from-scratch decoder with bit-identity asserted; emitted
-    length+md5 are encode→libzstd-decode-derived so the closed-form
-    oracle hash-checks acceptance by the reference implementation.
-    Gate: tests/test_zstd_encoder.py (ratio spread, cross-block
-    matches, CLI double-check, generative sweep). mapInPandas, zero
-    shuffle."""
-    from prom_etl_db_spark.functions import zstd
+    """E4 codec (r8): the zstd ENCODE direction. Each document's
+    DOUBLED UTF-8 bytes (doubling guarantees matches, so an encoding
+    that fails to shrink FAILS in-UDF rather than under-compressing
+    quietly) are compressed by libzstd (pyarrow) and decoded by
+    ``compression.zstd_decompress`` with bit-identity asserted; the
+    emitted length+md5 are decode-derived so the closed-form oracle
+    hash-checks the doubled payload. mapInPandas, zero shuffle."""
+    from prom_etl_db_spark.functions import compression
 
     docs = _t(spark, sf_dir, "documents")
-    return zstd.zstd_encode_features(docs)
+    return compression.roundtrip_features(docs, "zstd", doubled=True)

@@ -1350,23 +1350,23 @@ FROM base
 def warc_zstd_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E4/E5 web curation (r7): ``.warc.zst`` — Common Crawl's actual
     zstd-framed WARC container — parsed end to end: each fixture file's
-    WARC bytes are compressed with REAL libzstd (pyarrow, genuine
-    Huffman/FSE blocks), decompressed by the r7 from-scratch RFC 8878
-    frame walk, then run through the ISO 28500 record parser — the
-    composition of two independently-gated operators (zstd roundtrip,
+    WARC bytes are compressed with libzstd (pyarrow), decompressed by
+    ``compression.zstd_decompress`` (the streaming libzstd decoder for
+    outside bytes), then run through the ISO 28500 record parser — the
+    composition of two independently-gated operators (zstd decode,
     WARC record walk) sharing one oracle with ``warc_record_parse``
     (same closed-form record expectations; the compression layer must
     be bit-transparent or every md5 breaks). Production .warc.zst
     carries an optional skippable-frame dictionary — skippable frames
-    pass through; dictionary frames refuse loudly (DIVERGENCES.md).
-    Plan: one mapInPandas decompress + one mapInPandas record walk,
-    zero shuffle, per-file parallel."""
+    pass through; dictionary frames are refused by libzstd
+    (DIVERGENCES.md). Plan: one mapInPandas decompress + one
+    mapInPandas record walk, zero shuffle, per-file parallel."""
     from typing import Iterator
 
     import pandas as pd
     from pyspark.sql import types as T
 
-    from prom_etl_db_spark.functions.zstd import zstd_decompress
+    from prom_etl_db_spark.functions.compression import zstd_decompress
 
     docs = _t(spark, sf_dir, "documents")
     files = _warc_fixture(docs)

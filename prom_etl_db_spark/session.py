@@ -30,6 +30,10 @@ def get_spark(app_name: str = "prom-etl-db-spark", master: str | None = None) ->
         # day rewrite (A21/A26) without clobbering sibling partitions.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.session.timeZone", "UTC")
+        # scratch.materialize's reliable checkpoints are files under the
+        # checkpoint dir; without this the ContextCleaner never deletes
+        # them, and a long-lived serve session accumulates them forever.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         # Whole-stage codegen emits one JIT-compiled class per plan stage;
         # the JVM's default 240 MB reserved code cache fills after ~10

@@ -23,7 +23,7 @@ import pytest
 from prom_etl_db_spark.functions import mime as M
 from prom_etl_db_spark.functions import otlp as O
 from prom_etl_db_spark.functions import warc as W
-from prom_etl_db_spark.functions.zstd import zstd_compress_raw, zstd_decompress
+from prom_etl_db_spark.functions.compression import zstd_decompress
 
 
 # --- warc ∘ zstd seams --------------------------------------------------------
@@ -64,14 +64,15 @@ def test_warc_zstd_truncated_final_frame_refuses():
 def test_warc_zstd_content_size_lie_refuses():
     """A frame whose frame-content-size field lies about the payload
     refuses at the zstd layer (before WARC framing can mis-parse)."""
-    frame = bytearray(zstd_compress_raw(b"A" * 64, checksum=False))
-    # frame: magic(4) + fhd(1) + [window?] + fcs... find and corrupt the
-    # content size byte: zstd_compress_raw emits fhd with single-segment
-    # + fcs_flag 0 → 1-byte content size right after fhd
-    assert frame[4] & 0x20  # single-segment flag set
-    frame[5] = 63  # declared 63, actual 64
-    with pytest.raises(ValueError, match="content size mismatch"):
-        zstd_decompress(bytes(frame))
+    rec = _warc_rec(b"A" * 64)
+    # magic, fhd (single-segment, 4-byte content size), content size
+    # declared one short, then one raw last block holding the record
+    frame = struct.pack("<I", 0xFD2FB528) + bytes([0xA0])
+    frame += struct.pack("<I", len(rec) - 1)
+    frame += ((len(rec) << 3) | 1).to_bytes(3, "little") + rec
+    assert zstd_decompress(frame[:5] + struct.pack("<I", len(rec)) + frame[9:]) == rec
+    with pytest.raises(ValueError, match="zstd"):
+        zstd_decompress(frame)
 
 
 def test_warc_lying_content_length_refuses_both_directions():

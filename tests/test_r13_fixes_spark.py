@@ -235,3 +235,31 @@ def test_sum_by_pinned_rows_both_group_stats(spark):
     for gs in ("window", "join"):
         assert canon(NH.native_hist_sum_by(
             df, ("metric_name",), group_stats=gs)) == want, gs
+
+
+def test_get_spark_cleans_reliable_checkpoints():
+    """ADVICE r13: ``session.get_spark`` sets
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` on the
+    SparkContext it starts, so ``scratch.materialize``'s reliable
+    checkpoints are deleted in a long-lived serve session. A fresh
+    process, because the conf only takes effect when the context is
+    created."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from prom_etl_db_spark.session import get_spark\n"
+        "s = get_spark('ckpt-conf', master='local[1]')\n"
+        "print(s.sparkContext.getConf()"
+        ".get('spark.cleaner.referenceTracking.cleanCheckpoints'))\n"
+        "s.stop()\n"
+    )
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="512m")
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parent.parent, env=env, timeout=300,
+        check=True,
+    )
+    assert out.stdout.strip().splitlines()[-1] == "true"

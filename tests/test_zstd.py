@@ -1,7 +1,7 @@
-"""zstd frame/block decode (functions/zstd.py — round 7): interop
-against REAL libzstd (pyarrow) across compression levels, the raw/RLE
-encoder accepted by libzstd, XXH64 vectors, checksum verification,
-skippable/multi-frame input, and truncation/bit-flip fuzz."""
+"""zstd decode (functions/compression.py): libzstd frames across levels
+and sizes, handcrafted raw/RLE-block frames, skippable and multi-frame
+input, and the refusals of frame-level lies (checksum, content size,
+dictionary, reserved block type, output bomb)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,34 @@ import struct
 
 import pytest
 
-from prom_etl_db_spark.functions import zstd as Z
+from prom_etl_db_spark.functions import compression as C
+
+# XXH64 of the empty string (the public test vector); a frame checksum
+# is its low 32 bits.
+_XXH64_EMPTY_LO32 = 0xEF46DB3751D8E999 & 0xFFFFFFFF
+
+
+def zstd_frame(payload: bytes, *, declared: int | None = None,
+               checksum: int | None = None, rle: bool = False) -> bytes:
+    """A single-segment frame of one raw (or RLE) block, by RFC 8878:
+    magic, frame-header descriptor, content size (``declared``, default
+    the payload length), block header, block, optional checksum."""
+    size = len(payload) if declared is None else declared
+    fhd = 0x20 | (0x04 if checksum is not None else 0)
+    out = bytearray(struct.pack("<I", 0xFD2FB528))
+    if size < 256:
+        out += bytes([fhd, size])
+    else:
+        out += bytes([fhd | 0x80]) + struct.pack("<I", size)
+    if rle:
+        assert len(set(payload)) == 1
+        out += ((len(payload) << 3) | (1 << 1) | 1).to_bytes(3, "little")
+        out += payload[:1]
+    else:
+        out += ((len(payload) << 3) | 1).to_bytes(3, "little") + payload
+    if checksum is not None:
+        out += struct.pack("<I", checksum)
+    return bytes(out)
 
 
 def _payloads():
@@ -29,13 +56,8 @@ def _payloads():
 
 
 def test_interop_decode_vs_libzstd_across_levels():
-    """The decisive gate: frames produced by the reference
-    implementation (libzstd via pyarrow) at levels spanning fast to
-    max — exercising Huffman literals (direct + FSE weights, 1 and 4
-    streams), predefined AND header-described FSE sequence tables,
-    repeat offsets and treeless blocks — must decode bit-exactly.
-    This is also what pins the predefined FSE distributions as
-    correct rather than transcribed on trust."""
+    """Frames produced by libzstd at levels spanning fast to max must
+    decode bit-exactly through the streaming decoder."""
     from pyarrow import Codec
 
     n = 0
@@ -43,66 +65,56 @@ def test_interop_decode_vs_libzstd_across_levels():
         codec = Codec("zstd", compression_level=lvl)
         for p in _payloads():
             comp = bytes(codec.compress(p))
-            assert Z.zstd_decompress(comp, max_out=1 << 27) == p
+            assert C.zstd_decompress(comp, max_out=1 << 27) == p
             n += 1
     assert n == 63
 
 
 def test_raw_rle_encoder_accepted_by_libzstd_and_self():
+    """The handcrafted frames the refusal tests corrupt are valid to
+    begin with: libzstd's one-shot decoder and ``zstd_decompress``
+    both accept the raw-block and RLE-block forms."""
     from pyarrow import Codec
 
     codec = Codec("zstd")
     for p in _payloads():
-        enc = Z.zstd_compress_raw(p)
-        assert bytes(codec.decompress(enc, len(p))) == p
-        assert Z.zstd_decompress(enc) == p
-        # checksum-free variant decodes too
-        enc2 = Z.zstd_compress_raw(p, checksum=False)
-        assert Z.zstd_decompress(enc2) == p
-
-
-def test_xxh64_known_vectors():
-    assert Z.xxh64(b"") == 0xEF46DB3751D8E999
-    # self-consistency across the 4-accumulator and short paths
-    assert Z.xxh64(b"x" * 31) != Z.xxh64(b"x" * 32)
-    # seed sensitivity
-    assert Z.xxh64(b"abc", seed=1) != Z.xxh64(b"abc", seed=0)
+        frames = [zstd_frame(p)]
+        if p and len(set(p)) == 1:
+            frames.append(zstd_frame(p, rle=True))
+        for enc in frames:
+            assert bytes(codec.decompress(enc, len(p))) == p
+            assert C.zstd_decompress(enc) == p
 
 
 def test_checksum_mismatch_refused():
-    enc = bytearray(Z.zstd_compress_raw(b"payload bytes here"))
-    enc[-1] ^= 0xFF  # corrupt the stored checksum
+    # the empty payload's checksum is the public XXH64 vector: the
+    # frame decodes with it and refuses with any other value
+    assert C.zstd_decompress(zstd_frame(b"", checksum=_XXH64_EMPTY_LO32)) == b""
+    bad = zstd_frame(b"", checksum=_XXH64_EMPTY_LO32 ^ 0xFF)
     with pytest.raises(ValueError, match="checksum"):
-        Z.zstd_decompress(bytes(enc))
+        C.zstd_decompress(bad)
 
 
 def test_content_size_mismatch_refused():
-    enc = bytearray(Z.zstd_compress_raw(b"0123456789", checksum=False))
-    enc[5] = 9  # frame says 9, blocks regenerate 10
-    with pytest.raises(ValueError, match="content size"):
-        Z.zstd_decompress(bytes(enc))
+    enc = zstd_frame(b"0123456789", declared=9)  # frame says 9, block has 10
+    with pytest.raises(ValueError, match="zstd"):
+        C.zstd_decompress(enc)
 
 
 def test_skippable_and_multi_frame():
     skip = struct.pack("<II", 0x184D2A53, 5) + b"junk!"
-    f1 = Z.zstd_compress_raw(b"first|")
-    f2 = Z.zstd_compress_raw(b"second")
-    assert Z.zstd_decompress(skip + f1 + skip + f2) == b"first|second"
+    f1 = zstd_frame(b"first|")
+    f2 = zstd_frame(b"second")
+    assert C.zstd_decompress(skip + f1 + skip + f2) == b"first|second"
 
 
 def test_dictionary_frames_refused():
-    frame = bytearray(Z.zstd_compress_raw(b"x"))
-    frame[4] |= 0x01  # dictionary-id flag: 1 byte
-    frame.insert(5 + 1, 7)  # nonzero dict id after FCS... craft simpler:
-    # rebuild precisely: magic + fhd(single, fcs1, did1) + did + fcs + block
-    frame = bytearray(struct.pack("<I", Z._MAGIC))
-    frame.append(0x20 | 0x01)  # single-segment, dict flag 1
-    frame.append(7)            # dictionary id 7
-    frame.append(1)            # content size 1
-    frame += ((1 << 3) | 1).to_bytes(3, "little")  # raw block, last, size 1
-    frame += b"x"
-    with pytest.raises(ValueError, match="dictionary"):
-        Z.zstd_decompress(bytes(frame))
+    # magic + fhd(single-segment, dictionary-id flag 1) + dictionary
+    # id 7 + content size 1 + raw block "x"
+    frame = struct.pack("<I", 0xFD2FB528) + bytes([0x20 | 0x01, 7, 1])
+    frame += ((1 << 3) | 1).to_bytes(3, "little") + b"x"
+    with pytest.raises(ValueError, match="[Dd]ictionary"):
+        C.zstd_decompress(frame)
 
 
 def test_truncation_fuzz_refuses_loudly():
@@ -112,11 +124,9 @@ def test_truncation_fuzz_refuses_loudly():
     enc = bytes(codec.compress(b"hello hello hello world " * 50))
     for cut in range(len(enc)):
         try:
-            Z.zstd_decompress(enc[:cut])
+            C.zstd_decompress(enc[:cut])
         except ValueError:
             continue
-        # a truncation that still parses must be a clean frame prefix —
-        # impossible here because content size is declared
         raise AssertionError(f"truncation at {cut} silently accepted")
 
 
@@ -133,45 +143,55 @@ def test_bitflip_fuzz_never_crashes_unbounded():
         mutated = bytearray(enc)
         mutated[pos] ^= 1 << random.randrange(8)
         try:
-            out = Z.zstd_decompress(bytes(mutated), max_out=1 << 22)
+            out = C.zstd_decompress(bytes(mutated), max_out=1 << 22)
             assert len(out) <= 1 << 22
         except ValueError:
             continue
 
 
 def test_reserved_block_type_refused():
-    frame = bytearray(struct.pack("<I", Z._MAGIC))
-    frame.append(0x20)  # single-segment, fcs 1 byte
-    frame.append(0)
-    frame += ((0 << 3) | (3 << 1) | 1).to_bytes(3, "little")  # reserved type
-    with pytest.raises(ValueError, match="reserved block type"):
-        Z.zstd_decompress(bytes(frame))
+    frame = struct.pack("<I", 0xFD2FB528) + bytes([0x20, 0])
+    frame += ((3 << 1) | 1).to_bytes(3, "little")  # reserved type 3
+    with pytest.raises(ValueError, match="zstd"):
+        C.zstd_decompress(frame)
 
 
 def test_output_bomb_guard():
-    # RLE block regenerating far beyond max_out must refuse, not allocate
-    big = Z.zstd_compress_raw(b"\x00" * 100000, checksum=False)
+    # an RLE block regenerating far beyond max_out must refuse
+    big = zstd_frame(b"\x00" * 100000, rle=True)
     with pytest.raises(ValueError, match="max_out"):
-        Z.zstd_decompress(big, max_out=1 << 10)
+        C.zstd_decompress(big, max_out=1 << 10)
+    assert C.zstd_decompress(big, max_out=100000) == b"\x00" * 100000
 
 
 def test_roundtrip_features_spark(spark):
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma " * 30), (2, ""), (3, "zzz" * 1000)],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in Z.zstd_roundtrip_features(docs).collect()}
+    """The three ``payload_*`` query shapes in one job: zstd, doubled
+    zstd and lz4_raw, each emitting decode-derived length and md5."""
     import hashlib
+    from functools import reduce
 
-    for i, t in ((1, "alpha beta gamma " * 30), (2, ""), (3, "zzz" * 1000)):
-        assert got[i]["n_bytes"] == len(t.encode())
-        assert got[i]["payload_md5"] == hashlib.md5(t.encode()).hexdigest()
+    from pyspark.sql import functions as F
+
+    texts = {1: "alpha beta gamma " * 30, 2: "", 3: "zzz" * 1000}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    variants = [("zstd", False), ("zstd", True), ("lz4_raw", False)]
+    df = reduce(lambda a, b: a.unionByName(b), [
+        C.roundtrip_features(docs, codec, doubled=doubled)
+        .withColumn("variant", F.lit(i))
+        for i, (codec, doubled) in enumerate(variants)
+    ])
+    got = {(r["variant"], r["doc_id"]): r for r in df.collect()}
+    assert len(got) == len(variants) * len(texts)
+    for i, (_, doubled) in enumerate(variants):
+        for doc_id, t in texts.items():
+            raw = t.encode() * (2 if doubled else 1)
+            assert got[i, doc_id]["n_bytes"] == len(raw)
+            assert got[i, doc_id]["payload_md5"] == hashlib.md5(raw).hexdigest()
 
 
 def test_property_interop_random_payloads():
-    """Generative interop: arbitrary byte payloads through real libzstd
-    at a random level must decode bit-exactly — hypothesis explores the
-    literals/sequence shapes the fixed payload list cannot."""
+    """Generative interop: arbitrary byte payloads through libzstd at a
+    random level must decode bit-exactly."""
     from hypothesis import given, settings, strategies as st
     from pyarrow import Codec
 
@@ -179,7 +199,6 @@ def test_property_interop_random_payloads():
     @given(
         data=st.one_of(
             st.binary(max_size=4096),
-            # highly repetitive payloads exercise RLE/repeat offsets
             st.builds(
                 lambda unit, n: unit * n,
                 st.binary(min_size=1, max_size=16),
@@ -190,24 +209,26 @@ def test_property_interop_random_payloads():
     )
     def roundtrip(data: bytes, level: int) -> None:
         comp = bytes(Codec("zstd", compression_level=level).compress(data))
-        assert Z.zstd_decompress(comp, max_out=1 << 24) == data
+        assert C.zstd_decompress(comp, max_out=1 << 24) == data
 
     roundtrip()
 
 
 def test_multi_block_frame_treeless_and_repeat_tables():
-    """Payloads past the 128 KiB block ceiling force MULTI-BLOCK frames,
-    where later blocks reuse the previous Huffman tree (treeless
-    literals) and repeat-mode FSE tables — cross-block decoder state
-    the single-block sweep cannot reach. 735 KB of structured text at
-    four levels, bit-exact."""
+    """Payloads past the 128 KiB block ceiling make multi-block frames,
+    and past the decoder's 1 MiB read chunk make several reads; both
+    must decode bit-exactly, and ``max_out`` equal to the exact size
+    must not refuse."""
     from pyarrow import Codec
 
     random.seed(7)
     words = ["alpha", "beta", "gamma", "delta",
              "epsilon", "zeta", "theta", "lambda"]
-    big = (" ".join(random.choice(words) for _ in range(120_000))).encode()
-    assert len(big) > 5 * (1 << 17)  # spans >5 max-size blocks
-    for lvl in (1, 3, 9, 19):
+    big = (" ".join(random.choice(words) for _ in range(400_000))).encode()
+    assert len(big) > 2 * (1 << 20)  # spans several read chunks
+    for lvl in (1, 9):
         comp = bytes(Codec("zstd", compression_level=lvl).compress(big))
-        assert Z.zstd_decompress(comp, max_out=1 << 24) == big
+        assert C.zstd_decompress(comp, max_out=1 << 24) == big
+        assert C.zstd_decompress(comp, max_out=len(big)) == big
+        with pytest.raises(ValueError, match="max_out"):
+            C.zstd_decompress(comp, max_out=len(big) - 1)

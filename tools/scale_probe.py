@@ -1209,17 +1209,14 @@ def probe(spark, sf_dir: str, k: int) -> dict[str, tuple[float, int]]:
     # "embarrassingly parallel" as measured fact).
     from prom_etl_db_spark.functions.netpbm import netpbm_roundtrip_features as _np
     from prom_etl_db_spark.functions.tiff import tiff_roundtrip_features as _tf
-    from prom_etl_db_spark.functions.lz4 import lz4_roundtrip_features as _lz
+    from prom_etl_db_spark.functions.compression import roundtrip_features as _rt
 
     run("netpbm_decode", _np(docs))
     run("tiff_decode", _tf(docs))
-    run("lz4_roundtrip", _lz(docs))
+    run("lz4_roundtrip", _rt(docs, "lz4_raw"))
 
-    # zstd (r7): same per-doc mapInPandas posture; the decode walks
-    # REAL libzstd frames (pyarrow compress in-UDF).
-    from prom_etl_db_spark.functions.zstd import zstd_roundtrip_features as _zs
-
-    run("zstd_roundtrip", _zs(docs))
+    # zstd (r7): same per-doc mapInPandas posture, libzstd both ways.
+    run("zstd_roundtrip", _rt(docs, "zstd"))
 
     # r7 second wave: container sniff refinement (Python touches only
     # the octet-stream residue) and the ElementTree sitemap tail —
