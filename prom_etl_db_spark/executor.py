@@ -354,6 +354,15 @@ def execute_config_query(
     record DataFrame either way (dry-run = don't pass paths — the repair
     tool's ``--dry-run``, A28).
 
+    The sink is one Spark action: the records are collected to the
+    driver with ``toArrow`` (under the config's timeout; bounded by
+    ``spark.driver.maxResultSize``) and written by pyarrow, one file
+    per day (``store.append_arrow``). The audited ``records_count`` is
+    the collected table's row count; the audit row is written the same
+    way. Like the reference, which holds each flattened result in
+    memory and inserts it in one transaction, an execution's result is
+    driver-sized.
+
     ``mode``: "append" (reference server behavior — every execution
     inserts; re-runs double-insert, §2.D exactly-once row) or
     "skip_existing" (A26 day-granular dedup: rows whose (query_id, day)
@@ -405,7 +414,7 @@ def execute_config_query(
         return records
 
     from prom_etl_db_spark.scheduler import run_query_audited
-    from prom_etl_db_spark.store import append_records, backfill_skip_existing
+    from prom_etl_db_spark.store import append_arrow, backfill_skip_existing
 
     to_write = records
     if mode == "skip_existing":
@@ -418,44 +427,32 @@ def execute_config_query(
         parse_duration(cfg.timeout).total_seconds() if cfg.timeout else None
     )
 
-    def _act(fn):
+    def _run() -> int:
+        # one Spark action; the write follows it outside the timeout, so
+        # a cancelled action never leaves a write running behind it
         if budget is None:
-            return fn()
-        from prom_etl_db_spark.parallel import run_with_job_timeout
+            table = to_write.toArrow()
+        else:
+            from prom_etl_db_spark.parallel import run_with_job_timeout
 
-        return run_with_job_timeout(
-            spark, fn, budget, group=f"cfg-{cfg.query_id}"
-        )
-
-    if audit_path is not None:
-        # the audit record needs the count — persist so count + write is
-        # one evaluation, not two full runs of the query
-        to_write.persist()
-
-        def _run() -> int:
-            def inner() -> int:
-                count = to_write.count()
-                if count:
-                    append_records(to_write, store_path)
-                return count
-
-            return _act(inner)
-
-        try:
-            run_query_audited(
-                spark,
-                query_id=cfg.query_id,
-                query_name=cfg.name,
-                run=_run,
-                audit_path=audit_path,
-                # the audit trail measures WALL-CLOCK start/end/duration
-                # of the action phase (executor.go:41-47) — only the
-                # EVALUATION instant is the frozen `now`; freezing the
-                # audit clock too would record every duration as 0 ms
-                now=audit_clock,
+            table = run_with_job_timeout(
+                spark, to_write.toArrow, budget, group=f"cfg-{cfg.query_id}"
             )
-        finally:
-            to_write.unpersist()
-    else:
-        _act(lambda: append_records(to_write, store_path))
+        append_arrow(table, store_path)
+        return table.num_rows
+
+    if audit_path is None:
+        _run()
+        return records
+    run_query_audited(
+        query_id=cfg.query_id,
+        query_name=cfg.name,
+        run=_run,
+        audit_path=audit_path,
+        # the audit trail measures WALL-CLOCK start/end/duration of the
+        # action phase (executor.go:41-47) — only the EVALUATION instant
+        # is the frozen `now`; freezing the audit clock too would record
+        # every duration as 0 ms
+        now=audit_clock,
+    )
     return records

@@ -182,7 +182,6 @@ def with_retry(
 
 
 def run_query_audited(
-    spark,
     *,
     query_id: str,
     query_name: str,
@@ -191,17 +190,17 @@ def run_query_audited(
     now: Callable[[], datetime] = datetime.utcnow,
 ):
     """A16/A31 protocol: audit running→success/failed with duration and
-    records_count; errors are recorded then re-raised (executor.go:73-92)."""
-    from prom_etl_db_spark.store import append_execution, execution_record
-
+    records_count; errors are recorded then re-raised (executor.go:73-92).
+    The row is built and written on the driver with pyarrow (no Spark
+    job), like the reference's one-row insert."""
     from prom_etl_db_spark.parallel import QueryTimeout
+    from prom_etl_db_spark.store import append_execution, execution_record
 
     start = now()
     try:
         count = run()
     except Exception as e:
         rec = execution_record(
-            spark,
             query_id=query_id,
             query_name=query_name,
             status="timeout" if isinstance(e, QueryTimeout) else "failed",
@@ -213,7 +212,6 @@ def run_query_audited(
         append_execution(rec, audit_path)
         raise
     rec = execution_record(
-        spark,
         query_id=query_id,
         query_name=query_name,
         status="success",

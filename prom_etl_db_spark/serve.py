@@ -100,9 +100,10 @@ def serve_loop(
             # tick (the reference fires sequentially, main.go:157-189 —
             # this is the Spark-first improvement, bounded by the pool).
             # Failures keep per-config attribution, ordered like `due`.
-            # Concurrent configs sharing a store/audit path are safe: the
-            # sinks serialize their COMMIT phase per output path
-            # (store._path_write_lock) while evaluation stays parallel.
+            # Concurrent configs sharing a store/audit path are safe: each
+            # execution's Spark action (evaluation + toArrow) runs in
+            # parallel, and only its pyarrow file writes serialize per
+            # output path (store._path_write_lock).
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=max_parallel) as pool:

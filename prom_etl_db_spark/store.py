@@ -15,17 +15,33 @@ Partitioning by day bucket is the reference's one deliberate physical
 design decision (day-truncated ``collected_at``, SURVEY.md §4.1) and is
 what makes day-level idempotent rewrite O(day) instead of O(table) — the
 property that still holds at 100 TB.
+
+Two writers share the layout. Bulk ingest and repair (``append_records``,
+``overwrite_days``) write through Spark. The per-execution lifecycle
+collects its driver-sized result once (``toArrow``) and writes it with
+pyarrow (``append_arrow``): one file per (execution, day), no Spark job
+and no commit protocol — the reference likewise inserts each execution's
+flattened result in one transaction. The audit row is built and written
+the same way (``execution_record`` → ``append_execution``). pyarrow's
+files carry INT96 timestamps and no stored Arrow schema, so they read
+back exactly like Spark's (whose ``outputTimestampType`` defaults to
+INT96) through both Spark and pyarrow, whichever file is listed first.
 """
 
 from __future__ import annotations
 
 import shutil
 import threading
+import uuid
 from datetime import date, datetime
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from prom_etl_db_spark.schema import EXECUTION_SCHEMA
 
@@ -36,18 +52,21 @@ _WRITE_LOCKS_GUARD = threading.Lock()
 
 
 def _path_write_lock(path: str) -> threading.Lock:
-    """Serialize Spark write jobs per output path within this process.
+    """Serialize writes per output path within this process.
 
     Spark's FileOutputCommitter stages EVERY concurrent job's task
     attempts under the same ``<path>/_temporary/0``; one job's commitJob/
     abort cleanup can delete another in-flight job's staged files — lost
-    or failed appends whenever ``serve --max-parallel`` fires two configs
-    that share a store/audit path. Writes commit under this lock; the
-    expensive part of an audited execution (the evaluation, materialized
-    by persist+count BEFORE the append) still runs concurrently, so the
-    lock serializes only the commit phase. Cross-process concurrency is
-    out of scope here — production multi-writer tables need a committer
-    with job-scoped staging (Delta/Iceberg) instead.
+    or failed appends whenever two writers share a store path. The
+    read→rewrite maintenance passes (``overwrite_days``,
+    ``delete_query_day``, ``compact_days``, retention) must also not
+    interleave with an append. Every writer, Spark or pyarrow, therefore
+    writes under this lock. An audited execution's expensive part (the
+    evaluation, collected by ``toArrow`` BEFORE ``append_arrow``) runs
+    outside it, so ``serve --max-parallel`` serializes only the
+    millisecond file writes. Cross-process concurrency is out of scope
+    here — production multi-writer tables need a committer with
+    job-scoped staging (Delta/Iceberg) instead.
     """
     key = str(Path(path).resolve())
     with _WRITE_LOCKS_GUARD:
@@ -59,6 +78,46 @@ def append_records(df: DataFrame, path: str) -> None:
     per path — see ``_path_write_lock``)."""
     with _path_write_lock(path):
         df.write.partitionBy(*PARTITION_COLS).mode("append").parquet(path)
+
+
+def _write_files(path: str, tables: list[tuple[Path, pa.Table]]) -> None:
+    """Write each table as one parquet file into its directory under
+    ``path``: every file to a hidden tmp name first, then all renamed
+    into place, under the per-path lock. Spark, pyarrow and
+    ``compact_days`` skip the dot-prefixed ``.tmp`` name, so a crash
+    before the renames leaves no visible row."""
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    with _path_write_lock(path):
+        staged = []
+        try:
+            for folder, table in tables:
+                folder.mkdir(parents=True, exist_ok=True)
+                staged.append((folder / f".{name}.tmp", folder / name))
+                pq.write_table(
+                    table, staged[-1][0],
+                    use_deprecated_int96_timestamps=True, store_schema=False)
+        except BaseException:
+            for tmp, _ in staged:
+                tmp.unlink(missing_ok=True)
+            raise
+        for tmp, final in staged:
+            tmp.rename(final)
+
+
+def append_arrow(table: pa.Table, path: str) -> None:
+    """A14 for a driver-side result (a ``toArrow`` of MetricRecord rows
+    with ``collected_date``): one file per day into the same
+    ``collected_date=…`` layout ``append_records`` writes; an empty
+    table writes nothing."""
+    days = table.column("collected_date")
+    data = table.drop_columns(list(PARTITION_COLS))
+    tables = [
+        (Path(path) / f"collected_date={day.isoformat()}",
+         data.filter(pc.equal(days, day)))
+        for day in pc.unique(days).to_pylist()
+    ]
+    if tables:
+        _write_files(path, tables)
 
 
 def read_records(spark: SparkSession, path: str) -> DataFrame:
@@ -320,8 +379,10 @@ def compact_days(
 # -- audit (A16/A18) ---------------------------------------------------------
 
 
+_EXECUTION_ARROW_SCHEMA = to_arrow_schema(EXECUTION_SCHEMA)
+
+
 def execution_record(
-    spark: SparkSession,
     *,
     query_id: str,
     query_name: str,
@@ -330,31 +391,29 @@ def execution_record(
     end_time: datetime | None = None,
     records_count: int | None = None,
     error_message: str | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """A16: build one audit row (status/duration/count/error —
-    `InsertQueryExecution`, mysql.go:139-163)."""
+    `InsertQueryExecution`, mysql.go:139-163). Naive datetimes are UTC
+    clock values (``datetime.utcnow``), stored as such on any host."""
     duration_ms = (
         int((end_time - start_time).total_seconds() * 1000) if end_time else None
     )
-    row = [
-        (
-            query_id,
-            query_name,
-            status,
-            start_time,
-            end_time,
-            duration_ms,
-            records_count,
-            error_message,
-            start_time,
-        )
-    ]
-    return spark.createDataFrame(row, EXECUTION_SCHEMA)
+    row = dict(
+        query_id=query_id,
+        query_name=query_name,
+        status=status,
+        start_time=start_time,
+        end_time=end_time,
+        duration_ms=duration_ms,
+        records_count=records_count,
+        error_message=error_message,
+        created_at=start_time,
+    )
+    return pa.Table.from_pylist([row], _EXECUTION_ARROW_SCHEMA)
 
 
-def append_execution(df: DataFrame, path: str) -> None:
-    with _path_write_lock(path):
-        df.write.mode("append").parquet(path)
+def append_execution(table: pa.Table, path: str) -> None:
+    _write_files(path, [(Path(path), table)])
 
 
 def apply_cdc_latest(

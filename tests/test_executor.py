@@ -426,3 +426,189 @@ def test_audit_duration_uses_wall_clock_not_frozen_now(spark, samples, tmp_path)
     assert len(a) == 1
     assert a[0]["duration_ms"] == 3000
     assert a[0]["end_time"] - a[0]["start_time"] == _td(seconds=3)
+
+
+# -- the lifecycle sink: one toArrow, one pyarrow file per (execution, day) --
+
+
+def _sink_files(store):
+    from pathlib import Path
+
+    return sorted(p for p in Path(store).rglob("*") if p.is_file())
+
+
+def _audit(spark, audit):
+    return spark.read.parquet(audit).orderBy("start_time").collect()
+
+
+@pytest.fixture(scope="module")
+def two_day_samples(spark):
+    # one series, hourly from 2024-03-14 06:00 to 2024-03-15 11:00
+    rows = [
+        ("q", "cpu", {"host": "a"}, float(h), NOW - timedelta(hours=30 - h),
+         "instant", NOW)
+        for h in range(30)
+    ]
+    return spark.createDataFrame(rows, METRICS_SCHEMA)
+
+
+@pytest.mark.parametrize("kind,cfg_kw,want", [
+    ("instant", dict(query="sum(cpu) by (host)", time_range_type="instant",
+                     time_range_time="now-1h"), 2),
+    ("range", dict(query="cpu", time_range_type="range", time_range_start="-6h",
+                   time_range_end="now", time_range_step="1h"), 12),
+    ("scalar", dict(query="2 * 3"), 1),
+    ("empty", dict(query="no_such_metric", time_range_type="instant",
+                   time_range_time="now-1h"), 0),
+])
+def test_audited_count_equals_stored_rows(spark, samples, tmp_path, kind, cfg_kw, want):
+    store, audit = str(tmp_path / "m"), str(tmp_path / "a")
+    cfg = QueryConfig(query_id=f"s-{kind}", name=kind, **cfg_kw)
+    execute_config_query(
+        spark, samples, cfg, now=NOW, store_path=store, audit_path=audit)
+    (row,) = _audit(spark, audit)
+    assert row["status"] == "success" and row["records_count"] == want
+    files = _sink_files(store)
+    if want == 0:
+        assert files == []  # an empty result writes no file
+        return
+    assert spark.read.parquet(store).count() == want
+    # one file, hidden tmp renamed away, in the execution's one day
+    assert [(f.parent.name, f.suffix) for f in files] == [
+        (f"collected_date={NOW.date().isoformat()}", ".parquet")]
+
+
+def test_one_execution_writes_one_file_per_day(spark, two_day_samples, tmp_path):
+    store, audit = str(tmp_path / "m"), str(tmp_path / "a")
+    cfg = QueryConfig(
+        query_id="s-2d", name="two days", query="cpu", time_range_type="range",
+        time_range_start="-30h", time_range_end="now", time_range_step="1h")
+    execute_config_query(
+        spark, two_day_samples, cfg, now=NOW, store_path=store, audit_path=audit)
+    files = _sink_files(store)
+    assert [f.parent.name for f in files] == [
+        "collected_date=2024-03-14", "collected_date=2024-03-15"]
+    stored = spark.read.parquet(store)
+    assert _audit(spark, audit)[0]["records_count"] == stored.count() == 30
+
+
+def test_skip_existing_audits_the_surviving_count(spark, two_day_samples, tmp_path):
+    store, audit = str(tmp_path / "m"), str(tmp_path / "a")
+    today = QueryConfig(
+        query_id="s-skip", name="today", query="cpu",
+        time_range_type="instant", time_range_time="now-1h")
+    execute_config_query(
+        spark, two_day_samples, today, now=NOW, store_path=store, audit_path=audit)
+    both_days = QueryConfig(
+        query_id="s-skip", name="both days", query="cpu", time_range_type="range",
+        time_range_start="-30h", time_range_end="now", time_range_step="1h")
+    execute_config_query(
+        spark, two_day_samples, both_days, now=NOW, store_path=store,
+        audit_path=audit, mode="skip_existing")
+    # the 2024-03-15 slice exists, so only the 18 rows of 03-14 survive
+    counts = {r["query_name"]: r["records_count"] for r in _audit(spark, audit)}
+    assert counts == {"today": 1, "both days": 18}
+    assert spark.read.parquet(store).count() == 19
+
+
+def test_timed_out_config_is_audited_and_writes_no_file(spark, samples, tmp_path):
+    import time as _time
+
+    from prom_etl_db_spark.parallel import QueryTimeout
+
+    slow = F.udf(lambda v: _time.sleep(5) or float(v), "double")
+    cfg = QueryConfig(
+        query_id="s-slow", name="slow", query="cpu", timeout="2s",
+        time_range_type="instant", time_range_time="now-1h")
+    store, audit = str(tmp_path / "m"), str(tmp_path / "a")
+    with pytest.raises(QueryTimeout):
+        execute_config_query(
+            spark, samples.withColumn("value", slow("value")), cfg, now=NOW,
+            store_path=store, audit_path=audit)
+    (row,) = _audit(spark, audit)
+    assert row["status"] == "timeout" and row["records_count"] == 0
+    assert _sink_files(store) == []
+
+
+_SUBPROCESS_SESSION = """
+import sys
+sys.path.insert(0, {repo!r})
+from datetime import datetime, timedelta
+from pyspark.sql import SparkSession, functions as F
+from prom_etl_db_spark.config import QueryConfig
+from prom_etl_db_spark.executor import execute_config_query
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.session.timeZone", "UTC")
+         {extra}.getOrCreate())
+spark.sparkContext.setLogLevel("OFF")
+NOW = datetime(2024, 3, 15, 12, 0, 0)
+"""
+
+
+def _run_session(script: str, tmp_path, *, env=None, extra=""):
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    code = _SUBPROCESS_SESSION.format(repo=repo, extra=extra) + script
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=tmp_path, capture_output=True,
+        text=True, timeout=300, env={**os.environ, **(env or {})})
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    return proc.stdout
+
+
+def test_audit_timestamps_are_utc_under_any_host_zone(tmp_path):
+    """The audit clock's naive UTC values are stored as UTC even when
+    the Python process's local zone is not UTC."""
+    import pyarrow.parquet as pq
+
+    out = _run_session(f"""
+samples = spark.createDataFrame(
+    [("cpu", {{"host": "a"}}, 1.0, NOW - timedelta(hours=1))],
+    "metric_name string, labels map<string,string>, value double, timestamp timestamp")
+ticks = [datetime(2024, 3, 15, 10, 0, 0), datetime(2024, 3, 15, 10, 0, 3)]
+cfg = QueryConfig(query_id="tz", name="tz", query="cpu",
+                  time_range_type="instant", time_range_time="now-1h")
+execute_config_query(spark, samples, cfg, now=NOW, store_path={str(tmp_path / 'm')!r},
+                     audit_path={str(tmp_path / 'a')!r}, audit_clock=lambda: ticks.pop(0))
+a = spark.read.parquet({str(tmp_path / 'a')!r})
+print(a.select(F.date_format("start_time", "HH:mm:ss"),
+               F.date_format("end_time", "HH:mm:ss")).first())
+""", tmp_path, env={"TZ": "Asia/Kolkata"})
+    assert "'10:00:00'" in out and "'10:00:03'" in out, out
+    (row,) = pq.read_table(str(tmp_path / "a")).to_pylist()
+    assert row["start_time"] == datetime(2024, 3, 15, 10, 0, 0)
+    assert row["created_at"] == datetime(2024, 3, 15, 10, 0, 0)
+    assert row["duration_ms"] == 3000
+
+
+def test_result_above_driver_max_result_size_is_audited_failed(tmp_path):
+    """The driver-side bound is Spark's own ``spark.driver.maxResultSize``:
+    a result above it fails the execution, audited, with no file."""
+    import pyarrow.parquet as pq
+
+    store = tmp_path / "m"
+    _run_session(f"""
+samples = spark.range(20000).select(
+    F.lit("cpu").alias("metric_name"),
+    F.create_map(F.lit("host"), F.concat(F.repeat(F.lit("x"), 200),
+                                         F.col("id").cast("string"))).alias("labels"),
+    F.col("id").cast("double").alias("value"),
+    F.lit(NOW - timedelta(hours=1)).alias("timestamp"))
+cfg = QueryConfig(query_id="big", name="big", query="cpu",
+                  time_range_type="instant", time_range_time="now-1h")
+try:
+    execute_config_query(spark, samples, cfg, now=NOW, store_path={str(store)!r},
+                         audit_path={str(tmp_path / 'a')!r})
+except Exception as e:
+    assert "spark.driver.maxResultSize" in str(e), str(e)
+else:
+    raise SystemExit("a ~5 MB result passed a 1m maxResultSize")
+""", tmp_path, extra='.config("spark.driver.maxResultSize", "1m")')
+    (row,) = pq.read_table(str(tmp_path / "a")).to_pylist()
+    assert row["status"] == "failed" and row["records_count"] == 0
+    assert not store.exists() or not [p for p in store.rglob("*") if p.is_file()]

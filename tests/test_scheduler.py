@@ -121,12 +121,11 @@ def test_audited_run_writes_success_and_failure(spark, tmp_path):
 
     audit = str(tmp_path / "audit")
     n = run_query_audited(
-        spark, query_id="q1", query_name="good", run=lambda: 7, audit_path=audit
+        query_id="q1", query_name="good", run=lambda: 7, audit_path=audit
     )
     assert n == 7
     with pytest.raises(ValueError):
         run_query_audited(
-            spark,
             query_id="q1",
             query_name="bad",
             run=lambda: (_ for _ in ()).throw(ValueError("x")),
@@ -137,6 +136,33 @@ def test_audited_run_writes_success_and_failure(spark, tmp_path):
     assert rows["good"]["records_count"] == 7
     assert rows["bad"]["status"] == "failed"
     assert rows["bad"]["error_message"] == "x"
+
+
+def test_audit_rows_share_spark_written_audit_schema(spark, tmp_path):
+    """Audit rows are written by pyarrow with the physical schema Spark's
+    own writer gives EXECUTION_SCHEMA, so an audit table holding rows
+    from both writers reads back whole through Spark and pyarrow."""
+    from datetime import datetime
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from prom_etl_db_spark.scheduler import run_query_audited
+    from prom_etl_db_spark.schema import EXECUTION_SCHEMA
+
+    audit = str(tmp_path / "audit")
+    t = datetime(2024, 3, 1, 10, 0, 0)
+    spark.createDataFrame(
+        [("q1", "old", "success", t, t, 0, 5, None, t)], EXECUTION_SCHEMA
+    ).coalesce(1).write.parquet(audit)
+    run_query_audited(query_id="q2", query_name="new", run=lambda: 3, audit_path=audit)
+    files = sorted(Path(audit).glob("*.parquet"))
+    assert len(files) == 2
+    assert len({pq.read_schema(f).remove_metadata() for f in files}) == 1
+    rows = {r["query_name"]: r for r in spark.read.parquet(audit).collect()}
+    assert rows["old"]["records_count"] == 5 and rows["new"]["records_count"] == 3
+    got = {r["query_name"]: r for r in pq.read_table(audit).to_pylist()}
+    assert got["old"]["start_time"] == t and got["new"]["status"] == "success"
 
 
 def test_run_with_job_timeout_cancels_runaway_and_passes_results(spark):

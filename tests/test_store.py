@@ -105,16 +105,15 @@ def test_retention_cleanup(spark, table):
     assert read_records(spark, table).select("collected_date").distinct().count() == 1
 
 
-def test_execution_record_duration(spark):
-    rec = execution_record(
-        spark,
+def test_execution_record_duration():
+    (rec,) = execution_record(
         query_id="q1",
         query_name="n",
         status="success",
         start_time=datetime(2024, 3, 1, 0, 0, 0),
         end_time=datetime(2024, 3, 1, 0, 0, 2, 500000),
         records_count=42,
-    ).first()
+    ).to_pylist()
     assert rec["duration_ms"] == 2500
     assert rec["records_count"] == 42
     assert rec["status"] == "success"
@@ -294,3 +293,131 @@ def test_apply_cdc_latest_null_op_is_not_a_delete(spark):
     # the NULL-op change wins latest-wins; three-valued != must not
     # silently treat it as a delete
     assert [(r["k"], r["val"]) for r in out.collect()] == [(1, 2.0)]
+
+
+# -- mixed writers: Spark (bulk ingest, repair) and pyarrow (lifecycle) -------
+
+
+def _two_writer_store(spark, table):
+    """Day 1 holds one Spark-written file (q1) and one Arrow-written file
+    (q2); day 2 one Arrow-written file (q1)."""
+    from prom_etl_db_spark.store import append_arrow
+
+    d1, d2 = date(2024, 3, 1), date(2024, 3, 2)
+    append_records(_records(spark, d1, 1.0).coalesce(1), table)
+    q2 = _records(spark, d1, 2.0).withColumn("query_id", F.lit("q2"))
+    append_arrow(q2.toArrow(), table)
+    append_arrow(_records(spark, d2, 3.0).toArrow(), table)
+    return d1, d2
+
+
+def _day_files(table, day):
+    from pathlib import Path
+
+    return sorted((Path(table) / f"collected_date={day.isoformat()}").glob("*.parquet"))
+
+
+def _rows(spark, table):
+    return sorted(
+        (r["query_id"], r["labels"]["host"], r["value"], r["timestamp"],
+         r["collected_at"], r["collected_date"])
+        for r in read_records(spark, table).collect()
+    )
+
+
+def test_mixed_writer_day_reads_back_equal(spark, table):
+    import pyarrow.parquet as pq
+
+    d1, _ = _two_writer_store(spark, table)
+
+    def by_spark(f):
+        return b"org.apache.spark.version" in (pq.read_metadata(f).metadata or {})
+
+    spark_file, arrow_file = sorted(_day_files(table, d1), key=by_spark, reverse=True)
+    assert by_spark(spark_file) and not by_spark(arrow_file)
+    # one physical schema: INT96 timestamps, no stored Arrow schema
+    schemas = {pq.read_schema(f).remove_metadata() for f in _day_files(table, d1)}
+    assert len(schemas) == 1
+    first = pq.ParquetDataset([spark_file, arrow_file]).read()
+    second = pq.ParquetDataset([arrow_file, spark_file]).read()
+    assert first.schema == second.schema
+    assert str(first.schema.field("timestamp").type) == "timestamp[ns]"
+    assert sorted(first.to_pylist(), key=repr) == sorted(second.to_pylist(), key=repr)
+    # Spark and pyarrow see the same rows, written by either writer
+    via_spark = _rows(spark, table)
+    via_arrow = sorted(
+        (r["query_id"], dict(r["labels"])["host"], r["value"],
+         r["timestamp"].to_pydatetime(), r["collected_at"].to_pydatetime(),
+         date.fromisoformat(r["collected_date"]))
+        for r in pq.read_table(table).to_pylist()
+    )
+    assert via_spark == via_arrow
+    assert len(via_spark) == 9
+    assert (("q2", "h0", 2.0, datetime(2024, 3, 1, 12), datetime(2024, 3, 1), d1)
+            in via_spark)
+
+
+def test_backfill_skip_existing_sees_both_writers(spark, table):
+    d1, d2 = _two_writer_store(spark, table)
+    q2 = _records(spark, d1, 5.0).withColumn("query_id", F.lit("q2"))
+    assert backfill_skip_existing(q2, spark, table).count() == 0
+    assert backfill_skip_existing(_records(spark, d2, 5.0), spark, table).count() == 0
+    fresh = _records(spark, date(2024, 3, 3), 5.0)
+    assert backfill_skip_existing(fresh, spark, table).count() == 3
+
+
+def test_overwrite_days_replaces_either_writers_slice(spark, table):
+    d1, _ = _two_writer_store(spark, table)
+    q2 = _records(spark, d1, 9.0).withColumn("query_id", F.lit("q2"))
+    overwrite_days(q2, table)  # the Arrow-written slice
+    overwrite_days(_records(spark, d1, 8.0), table)  # the Spark-written one
+    got = {(r[0], r[2]) for r in _rows(spark, table)}
+    assert got == {("q1", 8.0), ("q2", 9.0), ("q1", 3.0)}
+    assert len(_rows(spark, table)) == 9
+
+
+def test_delete_query_day_removes_either_writers_slice(spark, table):
+    from prom_etl_db_spark.store import delete_query_day
+
+    d1, _ = _two_writer_store(spark, table)
+    assert delete_query_day(spark, table, "q2", d1) == 3  # Arrow-written
+    assert {(r[0], r[2]) for r in _rows(spark, table)} == {("q1", 1.0), ("q1", 3.0)}
+    assert delete_query_day(spark, table, "q1", d1) == 3  # Spark-written
+    assert not _day_files(table, d1)
+    assert {(r[0], r[2]) for r in _rows(spark, table)} == {("q1", 3.0)}
+
+
+def test_compact_days_and_retention_treat_both_writers_alike(spark, table):
+    d1, d2 = _two_writer_store(spark, table)
+    before = _rows(spark, table)
+    assert compact_days(spark, table) == {d1: (2, 1)}
+    assert _rows(spark, table) == before
+    assert retention_cleanup(spark, table, older_than=d2) == 1
+    assert {r[5] for r in _rows(spark, table)} == {d2}
+
+
+def test_leftover_tmp_file_is_invisible(spark, table, monkeypatch):
+    """A crash between the pyarrow write and its rename leaves a hidden
+    tmp file: no reader and no compaction count may see it."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    from prom_etl_db_spark.store import append_arrow
+
+    d1, _ = _two_writer_store(spark, table)
+
+    def crash(self, target):
+        raise OSError("crash before rename")
+
+    monkeypatch.setattr(Path, "rename", crash)
+    with pytest.raises(OSError, match="crash before rename"):
+        append_arrow(_records(spark, d1, 7.0, n=4).toArrow(), table)
+    monkeypatch.undo()
+    part = Path(table) / f"collected_date={d1.isoformat()}"
+    (tmp,) = [f for f in part.iterdir() if f.name.endswith(".tmp")]
+    assert tmp.name.startswith(".") and pq.read_table(tmp).num_rows == 4
+    assert read_records(spark, table).count() == 9
+    assert pq.read_table(table).num_rows == 9
+    assert compact_days(spark, table) == {d1: (2, 1)}
+    assert read_records(spark, table).count() == 9
