@@ -72,6 +72,37 @@ def _names_native_metric(node, nset: frozenset) -> bool:
         for k in kids if not isinstance(k, (str, float, int)))
 
 
+# Range mode's sliding functions: PromQL function → (range function in
+# operators/promql.py, fixed kwargs, output column read as the value,
+# literal argument). The literal argument is (its position, the kwarg it
+# binds): quantile_over_time's leading q, predict_linear's trailing
+# horizon; every other function is unary over its range selector.
+_RANGE_MODE = {
+    "rate": ("rate_range", {}, "value", None),
+    "increase": ("increase_range", {}, "value", None),
+    "delta": ("delta_range", {}, "value", None),
+    "sum_over_time": ("agg_over_time_range", {"agg": "sum"}, "value", None),
+    "count_over_time": ("agg_over_time_range", {"agg": "count"}, "value", None),
+    "avg_over_time": ("agg_over_time_range", {"agg": "avg"}, "value", None),
+    "stdvar_over_time": ("agg_over_time_range", {"agg": "stdvar"}, "value", None),
+    "stddev_over_time": ("agg_over_time_range", {"agg": "stddev"}, "value", None),
+    "max_over_time": ("extrema_over_time_range", {}, "vmax", None),
+    "min_over_time": ("extrema_over_time_range", {}, "vmin", None),
+    "last_over_time": ("extrema_over_time_range", {}, "vlast", None),
+    "first_over_time": ("extrema_over_time_range", {}, "vfirst", None),
+    "changes": ("changes_range", {"kind": "changes"}, "value", None),
+    "resets": ("changes_range", {"kind": "resets"}, "value", None),
+    "deriv": ("regression_range", {}, "value", None),
+    "predict_linear": ("regression_range", {}, "value", (1, "predict_offset")),
+    "present_over_time": ("present_over_time_range", {}, "value", None),
+    "absent_over_time": ("absent_over_time_range", {}, "value", None),
+    "quantile_over_time": ("quantile_over_time_range", {}, "value", (0, "q")),
+    "mad_over_time": ("mad_over_time_range", {}, "value", None),
+    "irate": ("irate_idelta_range", {}, "virate", None),
+    "idelta": ("irate_idelta_range", {}, "videlta", None),
+}
+
+
 def evaluate_config_query(
     samples: DataFrame,
     cfg: QueryConfig,
@@ -162,117 +193,44 @@ def evaluate_config_query(
         # rate(x[5m]) / increase(x[5m]) as a RANGE query: the sliding
         # [t − frame, t) window evaluated at every grid step — the
         # range-function form _eval_stream's stream mode can't express
-        _SLIDING_FNS = (
-            "rate",
-            "increase",
-            "delta",
-            "sum_over_time",
-            "count_over_time",
-            "avg_over_time",
-            "max_over_time",
-            "min_over_time",
-            "last_over_time",
-            "first_over_time",
-            "stdvar_over_time",
-            "stddev_over_time",
-            "changes",
-            "resets",
-            "deriv",
-            "present_over_time",
-            "absent_over_time",
-            "quantile_over_time",
-            "mad_over_time",
-            "predict_linear",
-            "irate",
-            "idelta",
-        )
-        # quantile_over_time carries its q as a LEADING literal arg,
-        # predict_linear its horizon as a TRAILING one; the rest are
-        # unary — normalize to the selector's position
-        _sel_arg = 1 if (isinstance(node, Call) and node.fn == "quantile_over_time") else 0
-        _n_args = (
-            2
-            if isinstance(node, Call)
-            and node.fn in ("quantile_over_time", "predict_linear")
-            else 1
-        )
+        spec = _RANGE_MODE.get(node.fn) if isinstance(node, Call) else None
+        literal = spec and spec[3]
+        sel_arg = 1 if literal and literal[0] == 0 else 0
         if (
-            isinstance(node, Call)
-            and node.fn in _SLIDING_FNS
-            and len(node.args) == _n_args
-            and isinstance(node.args[_sel_arg], Selector)
-            and node.args[_sel_arg].range_
-            and not node.args[_sel_arg].step
+            spec
+            and len(node.args) == (2 if literal else 1)
+            and isinstance(node.args[sel_arg], Selector)
+            and node.args[sel_arg].range_
+            and not node.args[sel_arg].step
             # an @-pinned selector means ONE fixed window, not a sliding
             # one — rebuilding the selector without at_ would silently
             # ignore the pin; fall through to the stream evaluator's
             # PromQLError like other unsupported range-mode forms
-            and node.args[_sel_arg].at_ is None
+            and node.args[sel_arg].at_ is None
         ):
-            sel = node.args[_sel_arg]
+            sel = node.args[sel_arg]
             raw = _selector_stream(  # frame-less ctx: the sliding window
                 # reads back frame seconds BEFORE range start
                 EvalContext(samples, end, range_bounds=(start, end)),
                 Selector(sel.name, sel.matchers, offset=sel.offset),
             )
-            from functools import partial
-
             from prom_etl_db_spark.operators import promql as _promql
 
-            range_fn = {
-                "rate": _promql.rate_range,
-                "increase": _promql.increase_range,
-                "delta": _promql.delta_range,
-                "sum_over_time": partial(_promql.agg_over_time_range, agg="sum"),
-                "count_over_time": partial(_promql.agg_over_time_range, agg="count"),
-                "avg_over_time": partial(_promql.agg_over_time_range, agg="avg"),
-                "stdvar_over_time": partial(_promql.agg_over_time_range, agg="stdvar"),
-                "stddev_over_time": partial(_promql.agg_over_time_range, agg="stddev"),
-                "changes": partial(_promql.changes_range, kind="changes"),
-                "resets": partial(_promql.changes_range, kind="resets"),
-                "deriv": _promql.regression_range,
-                "max_over_time": lambda df, **kw: _promql.extrema_over_time_range(
-                    df, **kw
-                ).selectExpr("labels", "bucket_start", "vmax AS value"),
-                "min_over_time": lambda df, **kw: _promql.extrema_over_time_range(
-                    df, **kw
-                ).selectExpr("labels", "bucket_start", "vmin AS value"),
-                "last_over_time": lambda df, **kw: _promql.extrema_over_time_range(
-                    df, **kw
-                ).selectExpr("labels", "bucket_start", "vlast AS value"),
-                "first_over_time": lambda df, **kw: _promql.extrema_over_time_range(
-                    df, **kw
-                ).selectExpr("labels", "bucket_start", "vfirst AS value"),
-                "present_over_time": _promql.present_over_time_range,
-                "absent_over_time": _promql.absent_over_time_range,
-                "mad_over_time": _promql.mad_over_time_range,
-                "irate": lambda df, **kw: _promql.irate_idelta_range(
-                    df, **kw
-                ).selectExpr("labels", "bucket_start", "virate AS value"),
-                "idelta": lambda df, **kw: _promql.irate_idelta_range(
-                    df, **kw
-                ).selectExpr("labels", "bucket_start", "videlta AS value"),
-            }.get(node.fn)
-            if node.fn == "quantile_over_time":
+            fn_name, kwargs, column, _ = spec
+            kwargs = dict(kwargs)
+            if literal:
                 from prom_etl_db_spark.operators.promql_parser import _const
 
-                qv = _const(EvalContext(samples, end), node.args[0])
-
-                def range_fn(df, **kw):
-                    return _promql.quantile_over_time_range(df, qv, **kw)
-
-            elif node.fn == "predict_linear":
-                from prom_etl_db_spark.operators.promql_parser import _const
-
-                horizon = _const(EvalContext(samples, end), node.args[1])
-
-                def range_fn(df, **kw):
-                    return _promql.regression_range(
-                        df, predict_offset=horizon, **kw
-                    )
-            stream = range_fn(
-                raw, frame=sel.range_, step=step, start=start, end=end
+                kwargs[literal[1]] = _const(
+                    EvalContext(samples, end), node.args[literal[0]]
+                )
+            stream = getattr(_promql, fn_name)(
+                raw, frame=sel.range_, step=step, start=start, end=end, **kwargs
             )
+            if column != "value":
+                stream = stream.selectExpr(
+                    "labels", "bucket_start", f"{column} AS value"
+                )
         else:
             # the frame rides the context so it clips AFTER any offset
             # shift in the query (pre-filtering raw timestamps would make

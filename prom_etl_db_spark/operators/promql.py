@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 from datetime import datetime
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -976,6 +977,212 @@ def _grid_bounds(ts, t0, tN, frame_s: float, step_s: float):
     return first, last
 
 
+class _Range(NamedTuple):
+    """One sliding range evaluation, set up: the samples framed to
+    [start − frame, end), frame and step in seconds, the sample time and
+    range bounds as epoch-second Columns, ``_grid_bounds``' per-sample
+    first/last covered grid instants, and the resolved ``method``."""
+
+    df: DataFrame
+    frame_s: float
+    step_s: float
+    ts: Column
+    t0: Column
+    tN: Column
+    first: Column
+    last: Column
+    method: "str | None"
+
+
+def _range_setup(
+    samples: DataFrame,
+    frame: str,
+    step: str,
+    start: datetime,
+    end: datetime,
+    *,
+    method: "str | None" = None,
+    plans: "tuple[str, str] | None" = None,
+    name: str = "",
+    aligned_scale: bool = False,
+) -> _Range:
+    """Parse and validate ``frame``/``step``, frame the samples, and
+    resolve ``method`` against ``plans`` = (simple, scale): "auto" takes
+    the scale plan above frame/step = ``_RANGE_EXPLODE_MAX_RATIO``.
+    ``aligned_scale``: the scale plan needs frame % step == 0, so "auto"
+    keeps the simple plan on unaligned frames and asking for it there
+    raises."""
+    from prom_etl_db_spark.timeparse import parse_duration
+
+    frame_td, step_td = parse_duration(frame), parse_duration(step)
+    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
+    if step_s <= 0 or frame_s <= 0:
+        raise ValueError("frame and step must be positive durations")
+    if plans is not None:
+        simple, scale = plans
+        aligned = not aligned_scale or frame_s % step_s == 0
+        if method == "auto":
+            ratio = frame_s / step_s
+            method = scale if aligned and ratio > _RANGE_EXPLODE_MAX_RATIO else simple
+        if method == scale and not aligned:
+            raise ValueError(f"{scale} strategy needs frame to be a multiple of step")
+        if method not in plans:
+            raise ValueError(f"unknown {name} method {method!r}")
+    df = _frame(samples, start - frame_td, end)
+    ts = epoch_seconds(F.col("timestamp"))
+    t0 = F.lit(start.timestamp())
+    tN = F.lit(end.timestamp())
+    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
+    return _Range(df, frame_s, step_s, ts, t0, tN, first, last, method)
+
+
+def _fan_out(r: _Range, *cols) -> DataFrame:
+    """The explode plans' grid fan-out: each framed sample, projected to
+    ``cols``, once per grid instant whose window contains it, stamped
+    ``bucket_start`` — row amplification ≤ frame/step."""
+    return r.df.where(r.first <= r.last).select(
+        *cols,
+        F.explode(
+            F.sequence(
+                F.timestamp_seconds(r.first),
+                F.timestamp_seconds(r.last),
+                F.expr(f"INTERVAL {int(r.step_s)} SECONDS"),
+            )
+        ).alias("bucket_start"),
+    )
+
+
+def _diff_array(
+    r: _Range,
+    rows: DataFrame,
+    contribs: "dict[str, tuple[str, Column]]",
+    *,
+    min_n: int = 1,
+) -> DataFrame:
+    """The difference-array kernel of the additive sliding functions.
+
+    Each row of ``rows`` covers the contiguous grid-instant run
+    [``__tmin``, ``__tmax``]. ``contribs`` maps a running-sum column to
+    (event field, per-row contribution): the row adds the contribution
+    at ``__tmin`` and its negation one step past ``__tmax``. Coincident
+    events hash-aggregate per (series, t), a per-series running sum over
+    event instants yields every window's sums, and each constant segment
+    is filled onto its grid instants as ``__g`` (epoch seconds).
+    Intermediates are O(rows + output) at any frame/step ratio, never
+    frame/step-amplified. Segments whose running ``__n`` is below
+    ``min_n`` drop out. Returns (__series, *running sums, __g).
+    """
+    step_s, tN = r.step_s, r.tN
+    fields = [f for f, _ in contribs.values()]
+    pos = F.struct(
+        F.col("__tmin").alias("t"), *[c.alias(f) for f, c in contribs.values()]
+    )
+    neg = F.struct(
+        (F.col("__tmax") + step_s).alias("t"),
+        *[(-c).alias(f) for f, c in contribs.values()],
+    )
+    events = (
+        rows.where(F.col("__tmin") <= F.col("__tmax"))
+        .select("__series", F.explode(F.array(pos, neg)).alias("e"))
+        .select("__series", "e.t", *[f"e.{f}" for f in fields])
+        .groupBy("__series", "t")
+        .agg(*[F.sum(f).alias(f) for f in fields])
+    )
+    w = Window.partitionBy("__series").orderBy("t")
+    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    run = events.select(
+        "__series",
+        "t",
+        *[F.sum(f).over(cum).alias(s) for s, (f, _) in contribs.items()],
+        F.lead("t").over(w).alias("__next_t"),
+    )
+    seg_end = F.least(F.coalesce(F.col("__next_t") - step_s, tN), tN)
+    return run.where((F.col("__n") >= min_n) & (F.col("t") <= seg_end)).select(
+        "__series",
+        *contribs,
+        F.explode(
+            F.sequence(
+                F.col("t").cast("long"), seg_end.cast("long"), F.lit(int(step_s))
+            )
+        ).alias("__g"),
+    )
+
+
+def _labelled(df: DataFrame, *cols) -> DataFrame:
+    """The range functions' output projection: labels back from the
+    series key, then ``cols``."""
+    return df.select(F.map_from_entries("__series").alias("labels"), *cols)
+
+
+def _pair_sum_explode(
+    r: _Range, tiebreakers: Sequence[str], contrib_of, scale: "int | None" = None
+) -> DataFrame:
+    """Explode plan of the consecutive-pair sums (increase, changes,
+    resets): one ordered window per (series, t), ``contrib_of(previous
+    value)`` per pair, summed; windows without a pair drop out."""
+    exploded = _fan_out(r, "__series", "value", "timestamp", *tiebreakers)
+    w = Window.partitionBy("__series", "bucket_start").orderBy(
+        F.col("timestamp"), *[F.col(t) for t in tiebreakers]
+    )
+    contrib = contrib_of(F.lag("value").over(w))  # NULL on the first row
+    if scale is not None:
+        # multiply by the exact reciprocal (1e6, not /1e-6): the oracle
+        # multiplies, and the two differ in the last ulp — enough to flip
+        # a round() half-case
+        contrib = F.round(contrib * F.lit(scale), 0)
+    agg_value = F.sum(F.coalesce(F.col("__contrib"), F.lit(0.0)))
+    if scale is not None:
+        agg_value = agg_value / F.lit(scale)
+    return _labelled(
+        exploded.withColumn("__contrib", contrib)
+        .groupBy("__series", "bucket_start")
+        .agg(agg_value.alias("value"), F.count("__contrib").alias("__pairs"))
+        .where(F.col("__pairs") >= 1),
+        "bucket_start",
+        "value",
+    )
+
+
+def _pair_sum_events(
+    r: _Range, tiebreakers: Sequence[str], contrib, scale: "int | None" = None
+) -> DataFrame:
+    """Events plan of the consecutive-pair sums (increase, delta,
+    changes, resets). A pair (prev @ p, cur @ c) is inside window
+    [t − frame, t) exactly when c < t and p ≥ t − frame: the grid run
+    from cur's first covered instant to prev's last. ``contrib`` is the
+    pair's contribution over ``value`` and ``__prev_v``; ``scale``
+    quantizes it to integer multiples, so sums are exact and
+    order-independent."""
+    w = Window.partitionBy("__series").orderBy(
+        F.col("timestamp"), *[F.col(t) for t in tiebreakers]
+    )
+    pairs = r.df.select(
+        "__series",
+        "value",
+        r.ts.alias("__ts"),
+        F.lag("value").over(w).alias("__prev_v"),
+        F.lag(r.ts).over(w).alias("__prev_ts"),
+    ).where(F.col("__prev_v").isNotNull())
+    if scale is not None:
+        contrib = F.round(contrib * F.lit(scale), 0)
+    t_min, _ = _grid_bounds(F.col("__ts"), r.t0, r.tN, r.frame_s, r.step_s)
+    _, t_max = _grid_bounds(F.col("__prev_ts"), r.t0, r.tN, r.frame_s, r.step_s)
+    filled = _diff_array(
+        r,
+        pairs.select(
+            "__series",
+            contrib.alias("__c"),
+            t_min.alias("__tmin"),
+            t_max.alias("__tmax"),
+        ),
+        {"__v": ("dv", F.col("__c")), "__n": ("dc", F.lit(1).cast("long"))},
+    )
+    value = F.col("__v") if scale is None else F.col("__v") / F.lit(scale)
+    return _labelled(
+        filled, F.timestamp_seconds("__g").alias("bucket_start"), value.alias("value")
+    )
+
+
 def increase_range(
     samples: DataFrame,
     *,
@@ -1005,21 +1212,16 @@ def increase_range(
       instants whose window contains it, one ordered window per
       (series, t), one hash agg. Simple plan, but row amplification =
       frame/step (1,440× at the flagship's 24h/1m!).
-    - ``events`` — the difference-array form. Consecutive-pair
-      contributions are computed ONCE per series (no explode), and each
-      pair covers a CONTIGUOUS run of grid instants [t_min, t_max], so
-      it becomes two signed events (+contrib at t_min, −contrib after
-      t_max); a per-series running sum over event instants yields every
-      window's value, and a final explode fills only the OUTPUT grid
-      segments. Intermediate volume is O(pairs + output rows) —
-      independent of frame/step — so a 24h/1m query costs the same
-      shuffle as 24h/1h.
+    - ``events`` — the difference array over consecutive pairs: each
+      pair's reset-corrected contribution is computed ONCE per series
+      and covers a contiguous grid run, so intermediate volume is
+      O(pairs + output rows) — a 24h/1m query costs the same shuffle as
+      24h/1h.
     - ``auto`` (default) — ``events`` when frame/step > 32.
 
     Float note: ``events`` accumulates +x then −x in a running sum, so
-    values can differ from per-window summation by ~1e-13 relative —
-    far below the round-6 output convention; the unit suite asserts
-    equality at 1e-9.
+    its error grows with the series' cumulative sum, not with the
+    window (DIVERGENCES.md); ``quantize`` makes both plans exact.
 
     Grid instants with < 2 samples in the window drop out (no pair, no
     increase — matching ``increase``'s empty result on such frames).
@@ -1027,67 +1229,21 @@ def increase_range(
     Output: (labels, bucket_start, value) — bucket_start = the step
     instant t.
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s = frame_td.total_seconds()
-    step_s = step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    if method == "auto":
-        method = "events" if frame_s / step_s > _RANGE_EXPLODE_MAX_RATIO else "explode"
-    if method not in ("explode", "events"):
-        raise ValueError(f"unknown increase_range method {method!r}")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    if method == "events":
-        return _increase_range_events(
-            df, ts, t0, tN, frame_s, step_s, tiebreakers, quantize
-        )
-    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
-    exploded = df.where(first <= last).select(
-        "__series",
-        "value",
-        "timestamp",
-        *[F.col(t) for t in tiebreakers],
-        F.explode(
-            F.sequence(
-                F.timestamp_seconds(first),
-                F.timestamp_seconds(last),
-                F.expr(f"INTERVAL {int(step_s)} SECONDS"),
-            )
-        ).alias("bucket_start"),
+    r = _range_setup(
+        samples, frame, step, start, end,
+        method=method, plans=("explode", "events"), name="increase_range",
     )
-    w = Window.partitionBy("__series", "bucket_start").orderBy(
-        F.col("timestamp"), *[F.col(t) for t in tiebreakers]
-    )
-    delta = F.col("value") - F.lag("value").over(w)
-    contrib = F.when(delta < 0, F.col("value")).otherwise(delta)  # NULL first row
     scale = None if quantize is None else round(1.0 / quantize)
-    if scale is not None:
-        # multiply by the exact reciprocal (1e6, not /1e-6): the oracle
-        # multiplies, and the two differ in the last ulp — enough to flip
-        # a round() half-case
-        contrib = F.round(contrib * F.lit(scale), 0)
-    agg_value = F.sum(F.coalesce(F.col("__contrib"), F.lit(0.0)))
-    if scale is not None:
-        agg_value = agg_value / F.lit(scale)
-    return (
-        exploded.withColumn("__contrib", contrib)
-        .groupBy("__series", "bucket_start")
-        .agg(
-            agg_value.alias("value"),
-            F.count("__contrib").alias("__pairs"),
-        )
-        .where(F.col("__pairs") >= 1)
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            "bucket_start",
-            "value",
-        )
-    )
+    if r.method == "events":
+        reset = F.when(F.col("value") < F.col("__prev_v"), F.col("value"))
+        contrib = reset.otherwise(F.col("value") - F.col("__prev_v"))
+        return _pair_sum_events(r, tiebreakers, contrib, scale)
+
+    def contrib_of(prev):
+        delta = F.col("value") - prev
+        return F.when(delta < 0, F.col("value")).otherwise(delta)
+
+    return _pair_sum_explode(r, tiebreakers, contrib_of, scale)
 
 
 def delta_range(
@@ -1111,45 +1267,19 @@ def delta_range(
     - ``events`` — the telescoping identity ``last − first = Σ
       (cur − prev)`` over consecutive pairs fully inside the window makes
       delta difference-array-able exactly like increase, just without
-      reset correction: O(pairs + output) intermediates at any
-      frame/step ratio. Float reassociation bounds the divergence at
-      ~1e-13 relative (unit-tested vs explode).
+      reset correction.
     - ``auto`` — ``events`` above frame/step = 32.
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    if method == "auto":
-        method = "events" if frame_s / step_s > _RANGE_EXPLODE_MAX_RATIO else "explode"
-    if method not in ("explode", "events"):
-        raise ValueError(f"unknown delta_range method {method!r}")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    if method == "events":
-        return _increase_range_events(
-            df, ts, t0, tN, frame_s, step_s, tiebreakers, correction=False
-        )
-    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
-    order = F.struct(F.col("timestamp"), *[F.col(t) for t in tiebreakers])
-    exploded = df.where(first <= last).select(
-        "__series",
-        "value",
-        order.alias("__ord"),
-        F.explode(
-            F.sequence(
-                F.timestamp_seconds(first),
-                F.timestamp_seconds(last),
-                F.expr(f"INTERVAL {int(step_s)} SECONDS"),
-            )
-        ).alias("bucket_start"),
+    r = _range_setup(
+        samples, frame, step, start, end,
+        method=method, plans=("explode", "events"), name="delta_range",
     )
-    return (
-        exploded.groupBy("__series", "bucket_start")
+    if r.method == "events":
+        return _pair_sum_events(r, tiebreakers, F.col("value") - F.col("__prev_v"))
+    order = F.struct(F.col("timestamp"), *[F.col(t) for t in tiebreakers])
+    return _labelled(
+        _fan_out(r, "__series", "value", order.alias("__ord"))
+        .groupBy("__series", "bucket_start")
         .agg(
             (
                 F.max_by("value", F.col("__ord"))
@@ -1157,140 +1287,9 @@ def delta_range(
             ).alias("value"),
             F.count(F.lit(1)).alias("__n"),
         )
-        .where(F.col("__n") >= 2)
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            "bucket_start",
-            "value",
-        )
-    )
-
-
-def _increase_range_events(
-    df: DataFrame,
-    ts,
-    t0,
-    tN,
-    frame_s: float,
-    step_s: float,
-    tiebreakers: Sequence[str],
-    quantize: "float | None" = None,
-    correction: bool = True,
-    contrib_mode: str = "diff",
-) -> DataFrame:
-    """Difference-array evaluation of the sliding-window increase.
-
-    A consecutive pair (prev @ p, cur @ c) is inside window [t−frame, t)
-    exactly when c < t AND p ≥ t−frame — a contiguous grid-instant run
-    [t_min, t_max]. Emit (+contrib, +1 pair) at t_min and the negation
-    one step past t_max, hash-aggregate coincident events, running-sum
-    per series, then materialize each constant segment's grid instants.
-    Three shuffles total (pair window, event agg reuses its partitioning,
-    running-sum window), none wider than the series count × events —
-    never frame/step-amplified.
-    """
-    order = [F.col("timestamp"), *[F.col(t) for t in tiebreakers]]
-    w = Window.partitionBy("__series").orderBy(*order)
-    pairs = (
-        df.select(
-            "__series",
-            "value",
-            ts.alias("__ts"),
-            F.lag("value").over(w).alias("__prev_v"),
-            F.lag(ts).over(w).alias("__prev_ts"),
-        )
-        .where(F.col("__prev_v").isNotNull())
-    )
-    raw_diff = F.col("value") - F.col("__prev_v")
-    if contrib_mode == "changes":
-        # pair contributes 1 when the value changed — Σ = PromQL changes()
-        contrib = (F.col("value") != F.col("__prev_v")).cast("double")
-    elif contrib_mode == "resets":
-        # pair contributes 1 on a counter drop — Σ = PromQL resets()
-        contrib = (F.col("value") < F.col("__prev_v")).cast("double")
-    else:
-        contrib = (
-            F.when(F.col("value") < F.col("__prev_v"), F.col("value")).otherwise(
-                raw_diff
-            )
-            if correction  # PromQL counter-reset correction (increase/rate)
-            else raw_diff  # telescoping delta: Σ diffs = last − first
-        )
-    scale = None if quantize is None else round(1.0 / quantize)
-    if scale is not None:
-        # integer-multiple contributions -> exact, order-independent sums
-        # (multiply by the exact reciprocal; see the explode path note)
-        contrib = F.round(contrib * F.lit(scale), 0)
-    # first grid instant strictly after cur; last with prev still in frame
-    t_min = F.greatest(
-        t0 + (F.floor((F.col("__ts") - t0) / step_s) + 1) * step_s, t0
-    )
-    t_max = F.least(
-        t0 + F.floor((F.col("__prev_ts") + frame_s - t0) / step_s) * step_s, tN
-    )
-    events = (
-        pairs.select(
-            "__series",
-            contrib.alias("__c"),
-            t_min.alias("__tmin"),
-            t_max.alias("__tmax"),
-        )
-        .where(F.col("__tmin") <= F.col("__tmax"))
-        .select(
-            "__series",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("__tmin").alias("t"),
-                        F.col("__c").alias("dv"),
-                        F.lit(1).cast("long").alias("dc"),
-                    ),
-                    F.struct(
-                        (F.col("__tmax") + step_s).alias("t"),
-                        (-F.col("__c")).alias("dv"),
-                        F.lit(-1).cast("long").alias("dc"),
-                    ),
-                )
-            ).alias("e"),
-        )
-        .select("__series", "e.t", "e.dv", "e.dc")
-        .groupBy("__series", "t")
-        .agg(F.sum("dv").alias("dv"), F.sum("dc").alias("dc"))
-    )
-    w2 = Window.partitionBy("__series").orderBy("t")
-    cum = Window.partitionBy("__series").orderBy("t").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    run = events.select(
-        "__series",
-        "t",
-        F.sum("dv").over(cum).alias("__v"),
-        F.sum("dc").over(cum).alias("__n"),
-        F.lead("t").over(w2).alias("__next_t"),
-    )
-    seg_end = F.least(F.coalesce(F.col("__next_t") - step_s, tN), tN)
-    return (
-        run.where((F.col("__n") >= 1) & (F.col("t") <= seg_end))
-        .select(
-            "__series",
-            "__v",
-            F.explode(
-                F.sequence(
-                    F.col("t").cast("long"),
-                    seg_end.cast("long"),
-                    F.lit(int(step_s)),
-                )
-            ).alias("__g"),
-        )
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            F.timestamp_seconds("__g").alias("bucket_start"),
-            (
-                F.col("__v") / F.lit(round(1.0 / quantize))
-                if quantize is not None
-                else F.col("__v")
-            ).alias("value"),
-        )
+        .where(F.col("__n") >= 2),
+        "bucket_start",
+        "value",
     )
 
 
@@ -1344,68 +1343,37 @@ def extrema_over_time_range(
     Windows with no samples drop out. Output:
     (labels, bucket_start, vmax, vmin, vlast, vfirst).
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    aligned = frame_s % step_s == 0
-    if method == "auto":
-        method = (
-            "buckets"
-            if aligned and frame_s / step_s > _RANGE_EXPLODE_MAX_RATIO
-            else "explode"
-        )
-    if method == "buckets" and not aligned:
-        raise ValueError("buckets strategy needs frame to be a multiple of step")
-    if method not in ("explode", "buckets"):
-        raise ValueError(f"unknown extrema_over_time_range method {method!r}")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
+    r = _range_setup(
+        samples, frame, step, start, end, method=method,
+        plans=("explode", "buckets"), name="extrema_over_time_range",
+        aligned_scale=True,
+    )
+    frame_s, step_s, t0, tN = r.frame_s, r.step_s, r.t0, r.tN
     last_key = F.struct(
         F.col("timestamp"), *[F.col(t) for t in tiebreakers], F.col("value")
     )
-    if method == "explode":
-        first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
-        return (
-            df.where(first <= last)
-            .select(
-                "__series",
-                "value",
-                last_key.alias("__lk"),
-                F.explode(
-                    F.sequence(
-                        F.timestamp_seconds(first),
-                        F.timestamp_seconds(last),
-                        F.expr(f"INTERVAL {int(step_s)} SECONDS"),
-                    )
-                ).alias("bucket_start"),
-            )
+    if r.method == "explode":
+        return _labelled(
+            _fan_out(r, "__series", "value", last_key.alias("__lk"))
             .groupBy("__series", "bucket_start")
             .agg(
                 F.max("value").alias("vmax"),
                 F.min("value").alias("vmin"),
                 F.max("__lk").alias("__lkm"),
                 F.min("__lk").alias("__lkf"),
-            )
-            .select(
-                F.map_from_entries("__series").alias("labels"),
-                "bucket_start",
-                "vmax",
-                "vmin",
-                F.col("__lkm.value").alias("vlast"),
-                F.col("__lkf.value").alias("vfirst"),
-            )
+            ),
+            "bucket_start",
+            "vmax",
+            "vmin",
+            F.col("__lkm.value").alias("vlast"),
+            F.col("__lkf.value").alias("vfirst"),
         )
     # phase 1: tumbling step-bucket extremes (bucket start, step-aligned
     # to the grid; buckets from start − frame so early windows see their
     # pre-range context, like every other range-mode function)
-    b = (t0 + F.floor((ts - t0) / step_s) * step_s).cast("long")
+    b = (t0 + F.floor((r.ts - t0) / step_s) * step_s).cast("long")
     buckets = (
-        df.select("__series", b.alias("__b"), "value", last_key.alias("__lk"))
+        r.df.select("__series", b.alias("__b"), "value", last_key.alias("__lk"))
         .groupBy("__series", "__b")
         .agg(
             F.max("value").alias("__bmax"),
@@ -1456,18 +1424,15 @@ def extrema_over_time_range(
         F.max(bl).over(w).alias("__lwin"),
         F.min(bf).over(w).alias("__fwin"),
     )
-    return (
+    return _labelled(
         out.where(
             (F.col("__t") >= t0) & (F.col("__t") <= tN) & F.col("vmax").isNotNull()
-        )
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            F.timestamp_seconds(F.col("__t").cast("long")).alias("bucket_start"),
-            "vmax",
-            "vmin",
-            F.col("__lwin.s.value").alias("vlast"),
-            F.col("__fwin.s.value").alias("vfirst"),
-        )
+        ),
+        F.timestamp_seconds(F.col("__t").cast("long")).alias("bucket_start"),
+        "vmax",
+        "vmin",
+        F.col("__lwin.s.value").alias("vlast"),
+        F.col("__fwin.s.value").alias("vfirst"),
     )
 
 
@@ -1498,22 +1463,12 @@ def regression_range(
 
     Output: (labels, bucket_start, value).
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    if method == "auto":
-        method = "events" if frame_s / step_s > _RANGE_EXPLODE_MAX_RATIO else "explode"
-    if method not in ("explode", "events"):
-        raise ValueError(f"unknown regression_range method {method!r}")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    x = ts - t0  # centered time coordinate
-    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
+    r = _range_setup(
+        samples, frame, step, start, end,
+        method=method, plans=("explode", "events"), name="regression_range",
+    )
+    t0 = r.t0
+    x = r.ts - t0  # centered time coordinate
 
     def read_off(g):
         n = F.col("__n").cast("double")
@@ -1530,109 +1485,44 @@ def regression_range(
             )
         return F.when((F.col("__n") >= 2) & (denom > 0), value)
 
-    if method == "explode":
-        exploded = df.where(first <= last).select(
-            "__series",
-            x.alias("__x"),
-            "value",
-            F.explode(
-                F.sequence(
-                    F.timestamp_seconds(first),
-                    F.timestamp_seconds(last),
-                    F.expr(f"INTERVAL {int(step_s)} SECONDS"),
-                )
-            ).alias("bucket_start"),
-        )
-        agg = exploded.groupBy("__series", "bucket_start").agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum("__x").alias("__sx"),
-            F.sum("value").alias("__sv"),
-            F.sum(F.col("__x") * F.col("value")).alias("__sxv"),
-            F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
-        )
-        g = epoch_seconds(F.col("bucket_start"))
-        return (
-            agg.withColumn("value", read_off(g))
-            .where(F.col("value").isNotNull())
-            .select(
-                F.map_from_entries("__series").alias("labels"),
-                "bucket_start",
-                "value",
+    if r.method == "explode":
+        agg = (
+            _fan_out(r, "__series", x.alias("__x"), "value")
+            .groupBy("__series", "bucket_start")
+            .agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.sum("__x").alias("__sx"),
+                F.sum("value").alias("__sv"),
+                F.sum(F.col("__x") * F.col("value")).alias("__sxv"),
+                F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
             )
         )
-    pos = F.struct(
-        F.col("__tmin").alias("t"),
-        F.lit(1).cast("long").alias("dn"),
-        F.col("__x").alias("dx"),
-        F.col("value").alias("dv"),
-        (F.col("__x") * F.col("value")).alias("dxv"),
-        (F.col("__x") * F.col("__x")).alias("dxx"),
-    )
-    neg = F.struct(
-        (F.col("__tmax") + step_s).alias("t"),
-        F.lit(-1).cast("long").alias("dn"),
-        (-F.col("__x")).alias("dx"),
-        (-F.col("value")).alias("dv"),
-        (-F.col("__x") * F.col("value")).alias("dxv"),
-        (-F.col("__x") * F.col("__x")).alias("dxx"),
-    )
-    events = (
-        df.select(
-            "__series", x.alias("__x"), "value",
-            first.alias("__tmin"), last.alias("__tmax"),
-        )
-        .where(F.col("__tmin") <= F.col("__tmax"))
-        .select("__series", F.explode(F.array(pos, neg)).alias("e"))
-        .select("__series", "e.t", "e.dn", "e.dx", "e.dv", "e.dxv", "e.dxx")
-        .groupBy("__series", "t")
-        .agg(
-            F.sum("dn").alias("dn"),
-            F.sum("dx").alias("dx"),
-            F.sum("dv").alias("dv"),
-            F.sum("dxv").alias("dxv"),
-            F.sum("dxx").alias("dxx"),
-        )
-    )
-    w2 = Window.partitionBy("__series").orderBy("t")
-    cum = w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    run = events.select(
-        "__series",
-        "t",
-        F.sum("dn").over(cum).alias("__n"),
-        F.sum("dx").over(cum).alias("__sx"),
-        F.sum("dv").over(cum).alias("__sv"),
-        F.sum("dxv").over(cum).alias("__sxv"),
-        F.sum("dxx").over(cum).alias("__sxx"),
-        F.lead("t").over(w2).alias("__next_t"),
-    )
-    seg_end = F.least(F.coalesce(F.col("__next_t") - step_s, tN), tN)
-    filled = (
-        run.where((F.col("__n") >= 2) & (F.col("t") <= seg_end))
-        .select(
-            "__series",
-            "__n",
-            "__sx",
-            "__sv",
-            "__sxv",
-            "__sxx",
-            F.explode(
-                F.sequence(
-                    F.col("t").cast("long"),
-                    seg_end.cast("long"),
-                    F.lit(int(step_s)),
-                )
-            ).alias("__g"),
-        )
-    )
-    g = F.col("__g").cast("double")
-    return (
-        filled.withColumn("value", read_off(g))
-        .where(F.col("value").isNotNull())
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            F.timestamp_seconds("__g").alias("bucket_start"),
+        g = epoch_seconds(F.col("bucket_start"))
+        return _labelled(
+            agg.withColumn("value", read_off(g)).where(F.col("value").isNotNull()),
+            "bucket_start",
             "value",
         )
+    filled = _diff_array(
+        r,
+        r.df.select(
+            "__series", x.alias("__x"), "value",
+            r.first.alias("__tmin"), r.last.alias("__tmax"),
+        ),
+        {
+            "__n": ("dn", F.lit(1).cast("long")),
+            "__sx": ("dx", F.col("__x")),
+            "__sv": ("dv", F.col("value")),
+            "__sxv": ("dxv", F.col("__x") * F.col("value")),
+            "__sxx": ("dxx", F.col("__x") * F.col("__x")),
+        },
+        min_n=2,
+    )
+    g = F.col("__g").cast("double")
+    return _labelled(
+        filled.withColumn("value", read_off(g)).where(F.col("value").isNotNull()),
+        F.timestamp_seconds("__g").alias("bucket_start"),
+        "value",
     )
 
 
@@ -1662,61 +1552,21 @@ def changes_range(
 
     Output: (labels, bucket_start, value).
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
     if kind not in ("changes", "resets"):
         raise ValueError(f"unknown changes_range kind {kind!r}")
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    if method == "auto":
-        method = "events" if frame_s / step_s > _RANGE_EXPLODE_MAX_RATIO else "explode"
-    if method not in ("explode", "events"):
-        raise ValueError(f"unknown changes_range method {method!r}")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    if method == "events":
-        return _increase_range_events(
-            df, ts, t0, tN, frame_s, step_s, tiebreakers, contrib_mode=kind
-        )
-    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
-    exploded = df.where(first <= last).select(
-        "__series",
-        "value",
-        "timestamp",
-        *[F.col(t) for t in tiebreakers],
-        F.explode(
-            F.sequence(
-                F.timestamp_seconds(first),
-                F.timestamp_seconds(last),
-                F.expr(f"INTERVAL {int(step_s)} SECONDS"),
-            )
-        ).alias("bucket_start"),
+    r = _range_setup(
+        samples, frame, step, start, end,
+        method=method, plans=("explode", "events"), name="changes_range",
     )
-    w = Window.partitionBy("__series", "bucket_start").orderBy(
-        F.col("timestamp"), *[F.col(t) for t in tiebreakers]
-    )
-    prev = F.lag("value").over(w)
-    ind = (
-        (F.col("value") != prev) if kind == "changes" else (F.col("value") < prev)
-    ).cast("double")
-    return (
-        exploded.withColumn("__c", ind)
-        .groupBy("__series", "bucket_start")
-        .agg(
-            F.sum(F.coalesce(F.col("__c"), F.lit(0.0))).alias("value"),
-            F.count("__c").alias("__pairs"),
-        )
-        .where(F.col("__pairs") >= 1)
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            "bucket_start",
-            "value",
-        )
-    )
+
+    def indicator(prev):
+        # 1 when the value changed (changes) or dropped (resets)
+        hit = (F.col("value") != prev) if kind == "changes" else (F.col("value") < prev)
+        return hit.cast("double")
+
+    if r.method == "events":
+        return _pair_sum_events(r, tiebreakers, indicator(F.col("__prev_v")))
+    return _pair_sum_explode(r, tiebreakers, indicator)
 
 
 def quantile_sketch_over_time_range(
@@ -1759,20 +1609,15 @@ def quantile_sketch_over_time_range(
 
     Output: (labels, bucket_start, n_values, q_estimate).
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
+    r = _range_setup(
+        samples, frame, step, start, end,
+        method=method, plans=("explode", "packed"), name="quantile sketch range",
+    )
+    frame_s, step_s, t0, tN = r.frame_s, r.step_s, r.t0, r.tN
     if frame_s % step_s != 0:
         raise ValueError("quantile sketch range mode needs frame % step == 0")
     width = (hi - lo) / bins
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    b = (t0 + F.floor((ts - t0) / step_s) * step_s).cast("long")
+    b = (t0 + F.floor((r.ts - t0) / step_s) * step_s).cast("long")
     vbin = F.least(
         F.lit(bins - 1),
         F.greatest(
@@ -1780,18 +1625,14 @@ def quantile_sketch_over_time_range(
         ),
     )
     counts = (
-        df.select("__series", b.alias("__b"), vbin.alias("__vbin"))
+        r.df.select("__series", b.alias("__b"), vbin.alias("__vbin"))
         .groupBy("__series", "__b", "__vbin")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    if method == "auto":
-        method = "packed" if frame_s / step_s > _RANGE_EXPLODE_MAX_RATIO else "explode"
-    if method not in ("explode", "packed"):
-        raise ValueError(f"unknown quantile sketch range method {method!r}")
     # bucket [b, b+step) ⊆ window [t−frame, t)  ⟺  t ∈ [b+step, b+frame]
     first = F.greatest(F.col("__b") + F.lit(int(step_s)), t0.cast("long"))
     last = F.least(F.col("__b") + F.lit(int(frame_s)), tN.cast("long"))
-    if method == "packed":
+    if r.method == "packed":
         packed = (
             counts.groupBy("__series", "__b")
             .agg(
@@ -1875,8 +1716,8 @@ def quantile_sketch_over_time_range(
         * (rank - (F.col("__cum") - F.col("__c"))).cast("double")
         / F.col("__c").cast("double")
     )
-    return hit.select(
-        F.map_from_entries("__series").alias("labels"),
+    return _labelled(
+        hit,
         F.timestamp_seconds(F.col("__t")).alias("bucket_start"),
         F.col("__n").cast("bigint").alias("n_values"),
         F.round(est, 6).alias("q_estimate"),
@@ -1902,35 +1743,20 @@ def agg_over_time_range(
 
     Strategies mirror ``increase_range``, one structural simplification:
     the difference array is per-SAMPLE, not per-pair — sample s covers
-    the contiguous grid run (ts, ts + frame], so it becomes (+value, +1)
-    at its first covered instant and the negation one step past its
-    last; running (Σvalue, Σcount) per series reads off every window,
-    ``avg`` divides at the end. Intermediates O(samples + output) at any
-    frame/step ratio. ``explode`` (auto below ratio 32) is the simple
-    per-instant groupBy; float reassociation between the two is ~1e-13
-    relative (unit-tested at 1e-9). Empty windows drop out (count ≥ 1),
-    matching the instant forms' empty-frame behavior.
+    the contiguous grid run (ts, ts + frame], so it contributes
+    (value, value², 1) there; running (Σv, Σv², n) per series reads off
+    every window, ``avg`` divides at the end. ``explode`` (auto below
+    ratio 32) is the simple per-instant groupBy. Empty windows drop out
+    (count ≥ 1), matching the instant forms' empty-frame behavior.
 
     Output: (labels, bucket_start, value).
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
     if agg not in ("sum", "count", "avg", "stdvar", "stddev", "stats"):
         raise ValueError(f"unsupported agg_over_time_range agg {agg!r}")
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    if method == "auto":
-        method = "events" if frame_s / step_s > _RANGE_EXPLODE_MAX_RATIO else "explode"
-    if method not in ("explode", "events"):
-        raise ValueError(f"unknown agg_over_time_range method {method!r}")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    # window [t−frame, t) contains ts  ⟺  ts < t ≤ ts + frame
-    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
+    r = _range_setup(
+        samples, frame, step, start, end,
+        method=method, plans=("explode", "events"), name="agg_over_time_range",
+    )
     # stdvar/stddev via the two-sums identity Σv²/n − (Σv/n)² — also
     # difference-arrayable (v² events ride beside v); the subtraction
     # can dip an epsilon negative under float cancellation → clamp.
@@ -1954,92 +1780,33 @@ def agg_over_time_range(
             variance.alias("vstdvar"),
         ),
     }
-    if method == "explode":
-        exploded = df.where(first <= last).select(
-            "__series",
-            "value",
-            F.explode(
-                F.sequence(
-                    F.timestamp_seconds(first),
-                    F.timestamp_seconds(last),
-                    F.expr(f"INTERVAL {int(step_s)} SECONDS"),
-                )
-            ).alias("bucket_start"),
-        )
-        return (
-            exploded.groupBy("__series", "bucket_start")
+    if r.method == "explode":
+        return _labelled(
+            _fan_out(r, "__series", "value")
+            .groupBy("__series", "bucket_start")
             .agg(
                 F.sum("value").alias("__v"),
                 F.sum(F.col("value") * F.col("value")).alias("__v2"),
                 F.count(F.lit(1)).alias("__n"),
-            )
-            .select(
-                F.map_from_entries("__series").alias("labels"),
-                "bucket_start",
-                value_of[agg].alias("value"),
-            )
-        )
-    events = (
-        df.select("__series", "value", first.alias("__tmin"), last.alias("__tmax"))
-        .where(F.col("__tmin") <= F.col("__tmax"))
-        .select(
-            "__series",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("__tmin").alias("t"),
-                        F.col("value").alias("dv"),
-                        (F.col("value") * F.col("value")).alias("dv2"),
-                        F.lit(1).cast("long").alias("dc"),
-                    ),
-                    F.struct(
-                        (F.col("__tmax") + step_s).alias("t"),
-                        (-F.col("value")).alias("dv"),
-                        (-F.col("value") * F.col("value")).alias("dv2"),
-                        F.lit(-1).cast("long").alias("dc"),
-                    ),
-                )
-            ).alias("e"),
-        )
-        .select("__series", "e.t", "e.dv", "e.dv2", "e.dc")
-        .groupBy("__series", "t")
-        .agg(
-            F.sum("dv").alias("dv"),
-            F.sum("dv2").alias("dv2"),
-            F.sum("dc").alias("dc"),
-        )
-    )
-    w2 = Window.partitionBy("__series").orderBy("t")
-    cum = w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    run = events.select(
-        "__series",
-        "t",
-        F.sum("dv").over(cum).alias("__v"),
-        F.sum("dv2").over(cum).alias("__v2"),
-        F.sum("dc").over(cum).alias("__n"),
-        F.lead("t").over(w2).alias("__next_t"),
-    )
-    seg_end = F.least(F.coalesce(F.col("__next_t") - step_s, tN), tN)
-    return (
-        run.where((F.col("__n") >= 1) & (F.col("t") <= seg_end))
-        .select(
-            "__series",
-            "__v",
-            "__v2",
-            "__n",
-            F.explode(
-                F.sequence(
-                    F.col("t").cast("long"),
-                    seg_end.cast("long"),
-                    F.lit(int(step_s)),
-                )
-            ).alias("__g"),
-        )
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            F.timestamp_seconds("__g").alias("bucket_start"),
+            ),
+            "bucket_start",
             value_of[agg].alias("value"),
         )
+    filled = _diff_array(
+        r,
+        r.df.select(
+            "__series", "value", r.first.alias("__tmin"), r.last.alias("__tmax")
+        ),
+        {
+            "__v": ("dv", F.col("value")),
+            "__v2": ("dv2", F.col("value") * F.col("value")),
+            "__n": ("dc", F.lit(1).cast("long")),
+        },
+    )
+    return _labelled(
+        filled,
+        F.timestamp_seconds("__g").alias("bucket_start"),
+        value_of[agg].alias("value"),
     )
 
 
@@ -2063,31 +1830,13 @@ def irate_idelta_range(
     plan; the per-window top-2 is one rank window over (timestamp,
     tiebreakers). Output: (labels, bucket_start, virate, videlta).
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
-    exploded = df.where(last >= first).select(
+    r = _range_setup(samples, frame, step, start, end)
+    exploded = _fan_out(
+        r,
         "__series",
         "value",
-        epoch_seconds(F.col("timestamp")).alias("__ts"),
-        F.struct(
-            F.col("timestamp"), *[F.col(t) for t in tiebreakers]
-        ).alias("__ord"),
-        F.explode(
-            F.sequence(
-                F.timestamp_seconds(first),
-                F.timestamp_seconds(last),
-                F.expr(f"INTERVAL {int(step_s)} SECONDS"),
-            )
-        ).alias("bucket_start"),
+        r.ts.alias("__ts"),
+        F.struct(F.col("timestamp"), *[F.col(t) for t in tiebreakers]).alias("__ord"),
     )
     w = Window.partitionBy("__series", "bucket_start").orderBy(
         F.col("__ord").desc()
@@ -2103,14 +1852,11 @@ def irate_idelta_range(
     dt = F.col("__l.__ts") - F.col("__p.__ts")
     # counter reset: a drop means restart — count the post-reset value
     inc = F.when(dv < 0, F.col("__l.value")).otherwise(dv)
-    return (
-        agg.where(F.col("__p").isNotNull() & (dt > 0))
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            "bucket_start",
-            (inc / dt).alias("virate"),
-            dv.alias("videlta"),
-        )
+    return _labelled(
+        agg.where(F.col("__p").isNotNull() & (dt > 0)),
+        "bucket_start",
+        (inc / dt).alias("virate"),
+        dv.alias("videlta"),
     )
 
 
@@ -2139,39 +1885,15 @@ def quantile_over_time_range(
 
     Output: (labels, bucket_start, value).
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
     if not 0.0 <= q <= 1.0:
         raise ValueError(f"quantile must be in [0, 1], got {q}")
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
-    return (
-        df.where(last >= first)
-        .select(
-            "__series",
-            "value",
-            F.explode(
-                F.sequence(
-                    F.timestamp_seconds(first),
-                    F.timestamp_seconds(last),
-                    F.expr(f"INTERVAL {int(step_s)} SECONDS"),
-                )
-            ).alias("bucket_start"),
-        )
+    r = _range_setup(samples, frame, step, start, end)
+    return _labelled(
+        _fan_out(r, "__series", "value")
         .groupBy("__series", "bucket_start")
-        .agg(F.percentile("value", q).alias("value"))
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            "bucket_start",
-            "value",
-        )
+        .agg(F.percentile("value", q).alias("value")),
+        "bucket_start",
+        "value",
     )
 
 
@@ -2192,47 +1914,21 @@ def mad_over_time_range(
     quantile, this is the dashboard-ratio form; there is no
     sketch-compose shortcut because the second median's input depends on
     the first."""
-    from prom_etl_db_spark.timeparse import parse_duration
-
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
-    exploded = (
-        df.where(last >= first)
-        .select(
-            "__series",
-            "value",
-            F.explode(
-                F.sequence(
-                    F.timestamp_seconds(first),
-                    F.timestamp_seconds(last),
-                    F.expr(f"INTERVAL {int(step_s)} SECONDS"),
-                )
-            ).alias("bucket_start"),
-        )
-    )
+    r = _range_setup(samples, frame, step, start, end)
+    exploded = _fan_out(r, "__series", "value")
     med = exploded.groupBy("__series", "bucket_start").agg(
         F.percentile("value", 0.5).alias("__med")
     )
-    return (
+    return _labelled(
         exploded.join(med, ["__series", "bucket_start"])
         .groupBy("__series", "bucket_start")
         .agg(
             F.percentile(F.abs(F.col("value") - F.col("__med")), 0.5).alias(
                 "value"
             )
-        )
-        .select(
-            F.map_from_entries("__series").alias("labels"),
-            "bucket_start",
-            "value",
-        )
+        ),
+        "bucket_start",
+        "value",
     )
 
 
@@ -2262,31 +1958,21 @@ def absent_over_time_range(
     against it — output and intermediates are O(steps), never
     O(samples × steps).
     """
-    from prom_etl_db_spark.timeparse import parse_duration
-
-    frame_td, step_td = parse_duration(frame), parse_duration(step)
-    frame_s, step_s = frame_td.total_seconds(), step_td.total_seconds()
-    if step_s <= 0 or frame_s <= 0:
-        raise ValueError("frame and step must be positive durations")
-    df = _frame(samples, start - frame_td, end)
-    ts = epoch_seconds(F.col("timestamp"))
-    t0 = F.lit(start.timestamp())
-    tN = F.lit(end.timestamp())
-    first, last = _grid_bounds(ts, t0, tN, frame_s, step_s)
+    r = _range_setup(samples, frame, step, start, end)
     present = (
-        df.where(last >= first)
+        r.df.where(r.last >= r.first)
         .select(
             F.explode(
                 F.sequence(
-                    first.cast("long"), last.cast("long"), F.lit(int(step_s))
+                    r.first.cast("long"), r.last.cast("long"), F.lit(int(r.step_s))
                 )
             ).alias("__t")
         )
         .distinct()
     )
-    n_steps = int((end - start).total_seconds() // step_s) + 1
+    n_steps = int((end - start).total_seconds() // r.step_s) + 1
     grid = samples.sparkSession.range(0, n_steps).select(
-        (F.lit(int(start.timestamp())) + F.col("id") * int(step_s)).alias("__t")
+        (F.lit(int(start.timestamp())) + F.col("id") * int(r.step_s)).alias("__t")
     )
     return grid.join(present, "__t", "left_anti").select(
         F.create_map().cast("map<string,string>").alias("labels"),

@@ -181,6 +181,25 @@ def with_retry(
     ) from last_err
 
 
+def _error_text(e: BaseException) -> str:
+    """The audit row's error text, root cause first. A failure inside a
+    Spark action surfaces as a py4j error whose text is mostly JVM
+    stack frames; the deepest Java cause's message (e.g. the
+    ``spark.driver.maxResultSize`` abort) leads, then the full text."""
+    from py4j.protocol import Py4JError
+
+    jexc = getattr(e, "java_exception", None)
+    if jexc is None:
+        return str(e)
+    try:
+        while jexc.getCause() is not None:
+            jexc = jexc.getCause()
+        root = jexc.toString()
+    except Py4JError:  # a dead gateway keeps the plain text
+        return str(e)
+    return f"{root}\n{e}"
+
+
 def run_query_audited(
     *,
     query_id: str,
@@ -207,7 +226,7 @@ def run_query_audited(
             start_time=start,
             end_time=now(),
             records_count=0,
-            error_message=str(e)[:2000],
+            error_message=_error_text(e)[:2000],
         )
         append_execution(rec, audit_path)
         raise

@@ -588,7 +588,9 @@ print(a.select(F.date_format("start_time", "HH:mm:ss"),
 
 def test_result_above_driver_max_result_size_is_audited_failed(tmp_path):
     """The driver-side bound is Spark's own ``spark.driver.maxResultSize``:
-    a result above it fails the execution, audited, with no file."""
+    a result above it fails the execution, audited, with no file, and the
+    audit ``error_message`` leads with that root cause rather than the
+    JVM frames around it."""
     import pyarrow.parquet as pq
 
     store = tmp_path / "m"
@@ -611,4 +613,5 @@ else:
 """, tmp_path, extra='.config("spark.driver.maxResultSize", "1m")')
     (row,) = pq.read_table(str(tmp_path / "a")).to_pylist()
     assert row["status"] == "failed" and row["records_count"] == 0
+    assert "spark.driver.maxResultSize" in row["error_message"][:300], row["error_message"]
     assert not store.exists() or not [p for p in store.rglob("*") if p.is_file()]

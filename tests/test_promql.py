@@ -625,6 +625,90 @@ def test_increase_range_auto_dispatch_and_bad_method(spark):
         increase_range(df, frame="60s", step="30s", method="nope", **kw)
 
 
+# (Exchange, Window, Generate, Aggregate) per sliding function × method,
+# read from the plans the family had before its kernels were shared.
+_RANGE_PLAN_SHAPES = {
+    "increase_range/explode": (1, 1, 1, 2),
+    "increase_range/events": (1, 2, 2, 2),
+    "rate_range/explode": (1, 1, 1, 2),
+    "rate_range/events": (1, 2, 2, 2),
+    "delta_range/explode": (1, 0, 1, 2),
+    "delta_range/events": (1, 2, 2, 2),
+    "regression_range/explode": (1, 0, 1, 2),
+    "regression_range/events": (2, 1, 2, 2),
+    "changes_range/explode": (1, 1, 1, 2),
+    "changes_range/events": (1, 2, 2, 2),
+    "agg_over_time_range/explode": (1, 0, 1, 2),
+    "agg_over_time_range/events": (2, 1, 2, 2),
+    "extrema_over_time_range/explode": (1, 0, 1, 2),
+    "extrema_over_time_range/buckets": (4, 1, 1, 4),
+    "quantile_sketch_over_time_range/explode": (3, 3, 1, 4),
+    "quantile_sketch_over_time_range/packed": (3, 3, 2, 6),
+    "irate_idelta_range": (1, 1, 1, 2),
+    "quantile_over_time_range": (1, 0, 1, 2),
+    "mad_over_time_range": (2, 0, 2, 4),
+    "present_over_time_range": (1, 0, 1, 2),
+    "absent_over_time_range": (2, 0, 1, 2),
+}
+
+def _range_plan_cases(spark):
+    """Every sliding range function × method on one small fixed input."""
+    from prom_etl_db_spark.operators import promql as P
+
+    rows = [
+        ({"host": h}, float((i * 7 + len(h)) % 13), -3600 + i * 90)
+        for h in ("a", "b")
+        for i in range(40)
+    ]
+    df = _samples(spark, rows)
+    kw = dict(frame="10m", step="5m", start=T0 - timedelta(seconds=1800), end=T0)
+    cases = {}
+    for fn, methods in (
+        (P.increase_range, ("explode", "events")),
+        (P.rate_range, ("explode", "events")),
+        (P.delta_range, ("explode", "events")),
+        (P.regression_range, ("explode", "events")),
+        (P.changes_range, ("explode", "events")),
+        (P.agg_over_time_range, ("explode", "events")),
+        (P.extrema_over_time_range, ("explode", "buckets")),
+        (P.quantile_sketch_over_time_range, ("explode", "packed")),
+    ):
+        for m in methods:
+            cases[f"{fn.__name__}/{m}"] = fn(df, method=m, **kw)
+    cases["irate_idelta_range"] = P.irate_idelta_range(df, **kw)
+    cases["quantile_over_time_range"] = P.quantile_over_time_range(df, 0.9, **kw)
+    cases["mad_over_time_range"] = P.mad_over_time_range(df, **kw)
+    cases["present_over_time_range"] = P.present_over_time_range(df, **kw)
+    cases["absent_over_time_range"] = P.absent_over_time_range(df, **kw)
+    return cases
+
+
+def _plan_shape(df) -> tuple[int, int, int, int]:
+    """(Exchange, Window, Generate, *Aggregate) node counts of the
+    physical plan Spark would run."""
+    import re
+
+    names = [
+        m.group(1)
+        for line in df._jdf.queryExecution().executedPlan().toString().splitlines()
+        if (m := re.match(r"[\s:+\-|]*(?:\*\(\d+\)\s*)?(\w+)", line))
+    ]
+    return (
+        names.count("Exchange"),
+        names.count("Window"),
+        names.count("Generate"),
+        sum(n.endswith("Aggregate") for n in names),
+    )
+
+
+def test_range_plan_shapes_are_pinned(spark):
+    """The sliding family shares its setup, fan-out and difference-array
+    kernels; an edit there must not silently change any function's
+    physical plan. Counts are (Exchange, Window, Generate, Aggregate)."""
+    got = {k: _plan_shape(v) for k, v in _range_plan_cases(spark).items()}
+    assert got == _RANGE_PLAN_SHAPES
+
+
 def test_delta_range_strategies_agree_and_match_hand_values(spark):
     """delta_range: telescoping events strategy equals the exact
     last-minus-first explode strategy; a hand-checked window confirms the
